@@ -140,6 +140,23 @@ def cache_materialized(df: DataFrame) -> DataFrame:
     return c
 
 
+def cache_for_gate(df: DataFrame) -> DataFrame:
+    """Cache df for a `maybe_broadcast` gate that plans read later, and
+    pay the materializing count only when the gate needs it. A lazy
+    cache reports its child's estimate: a file scan or a materialized
+    cache upstream already gives a size that clears the gate, while an
+    unknown one (a checkpoint-backed LogicalRDD, createDataFrame rows)
+    reads near Long.MaxValue and would refuse the hint for every ordinary
+    batch — only then does the count run, after which the
+    InMemoryRelation reports real bytes. The estimate is read off a
+    fresh projection: a frame keeps the stats of its first planning."""
+    c = df.cache()
+    est = estimated_plan_bytes(c.select("*"))
+    if est is None or est > BROADCAST_GATE_BYTES:
+        c.count()
+    return c
+
+
 # Catalyst's defaultSize for ArrayType/MapType is ONE element's width,
 # so a projection carrying a 50-element token-hash array is estimated
 # ~50x under its real bytes. Found empirically at the 1000x corpus: the

@@ -14,6 +14,7 @@
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -381,12 +382,22 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _arr_sql(xs: list[float]) -> str:
+def _arr_sql(xs: list[float], at: str = "") -> str:
     """SQL array literal of DOUBLEs. repr() emits the shortest string
     that round-trips to the same IEEE-754 double, and the SQL parser's
     decimal-to-double conversion is correctly rounded — so the parsed
-    values are bit-identical to the F.lit(x) Columns this replaces."""
-    return "array(" + ", ".join(f"{float(x)!r}D" for x in xs) + ")"
+    values are bit-identical to the F.lit(x) Columns this replaces.
+    SQL has no literal for NaN/Inf (repr would emit `nanD`, a parse
+    error far from its cause), so a non-finite value raises here,
+    named with its index (`at` prefixes the outer index)."""
+    vals = [float(x) for x in xs]
+    for i, v in enumerate(vals):
+        if not math.isfinite(v):
+            raise ValueError(
+                f"non-finite value {v!r} at index {at}[{i}] of frozen "
+                "geometry (centroids, codebooks, planes or means)"
+            )
+    return "array(" + ", ".join(f"{v!r}D" for v in vals) + ")"
 
 
 def _arr2_sql(rows: list[list[float]]) -> str:
@@ -395,7 +406,8 @@ def _arr2_sql(rows: list[list[float]]) -> str:
     py4j call instead of one per element (guide §7.3: the frozen-IVF
     centroid/codebook literals cost 2,000+ F.lit round-trips per
     build)."""
-    return "array(" + ", ".join(_arr_sql(r) for r in rows) + ")"
+    return "array(" + ", ".join(
+        _arr_sql(r, f"[{i}]") for i, r in enumerate(rows)) + ")"
 
 
 def _dot_sql(vec_sql: str, xs: list[float]) -> str:

@@ -24,7 +24,7 @@ _NULL_MARK = "\x00NULL\x00"
 
 def keys_join(df: DataFrame, keys: DataFrame, how: str,
               gate_bytes: int | None = None) -> DataFrame:
-    """Null-safe semi/anti/inner join of df against a small key table
+    """Null-safe semi/anti join of df against a small key table
     (columns of `keys` must exist in df under the same names).
 
     NULL keys matter everywhere in the changelog operators: GROUP BY
@@ -33,18 +33,22 @@ def keys_join(df: DataFrame, keys: DataFrame, how: str,
     operator state forever. Key columns are renamed before joining:
     `keys` often derives from the same lineage as `df`, and same-name
     column references would resolve as trivially-true self comparisons.
+    Only semi/anti joins are accepted: they never fan out, so `keys`
+    may repeat a key and needs no distinct (one exchange fewer).
 
     The broadcast hint on the key side is SIZE-GATED, not pinned: the
     dirty-key set is bounded by the micro-batch in steady state, but a
     first backfill batch is corpus-sized — an unconditional hint would
-    OOM the build side at scale. Callers materialize the changelog
-    (cache_materialized) before deriving key sets, so Catalyst's stats
-    are real and the gate decides per batch; when the gate refuses, AQE
-    still picks a broadcast at runtime if the actual size allows.
+    OOM the build side at scale. Callers materialize key sets
+    (cache_materialized), so the gate reads real bytes and decides per
+    batch; when the gate refuses, AQE still picks a broadcast at runtime
+    if the actual size allows.
     """
+    if how not in ("semi", "anti"):
+        raise ValueError(f"keys_join is semi/anti only, got {how!r}")
     renamed = keys.select(
         *[F.col(c).alias(f"__k_{c}") for c in keys.columns]
-    ).distinct()
+    )
     kdf = maybe_broadcast(renamed, gate_bytes)
     c = None
     for kc in keys.columns:
@@ -62,6 +66,82 @@ def row_digest(cols: list[str], prefix: str = "") -> Column:
         F.coalesce(F.col(prefix + c).cast("string"), F.lit(_NULL_MARK)) for c in cols
     ]
     return F.md5(F.concat_ws("\x01", *parts))
+
+
+def diff_changelog(new: DataFrame, old: DataFrame | None,
+                   id_cols: list[str], key: str) -> DataFrame:
+    """One epoch's I/U/D diff of a retracting operator: the rows it
+    recomputed (`new`) against the rows it emitted before for the same
+    dirty keys (`old`, same columns; None when nothing was emitted yet),
+    paired on a row_digest of `id_cols` so NULL-keyed rows pair up too.
+    Columns: `key` (the digest), `__op`, then new's columns — the new
+    image for I/U, the old image for D (Operation::Delete{old}).
+
+    Materialized ONCE, as an eager local checkpoint. The operator's
+    output changelog (the diff without `key`) and its state advance
+    (`diff_upserts`) both read it, so the diff joins run once per epoch.
+    A lazy checkpoint would save nothing: under AQE, building its RDD
+    already runs every query stage."""
+    cols = new.columns
+
+    def image(df: DataFrame, name: str) -> DataFrame:
+        return df.select(row_digest(id_cols).alias(key),
+                         F.struct(*[F.col(c) for c in cols]).alias(name))
+
+    n = image(new, "__new")
+    if old is None:
+        diffed = n.select(key, F.lit("I").alias("__op"),
+                          F.col("__new").alias("__img"))
+    else:
+        op = (
+            F.when(F.col("__old").isNull(), F.lit("I"))
+            .when(F.col("__new").isNull(), F.lit("D"))
+            .when(F.col("__new") != F.col("__old"), F.lit("U"))
+        )
+        diffed = (
+            n.join(image(old, "__old"), key, "full_outer")
+            .withColumn("__op", op)
+            .filter(F.col("__op").isNotNull())
+            .select(key, "__op",
+                    F.when(F.col("__op") == "D", F.col("__old"))
+                    .otherwise(F.col("__new")).alias("__img"))
+        )
+    return diffed.select(
+        key, "__op", *[F.col(f"__img.{c}").alias(c) for c in cols]
+    ).localCheckpoint(eager=True)
+
+
+def diff_upserts(diff: DataFrame) -> DataFrame:
+    """A diff_changelog frame as diff-state advance rows: digest, image
+    and `__del` (a D deletes its digest, I/U upsert the image)."""
+    return diff.withColumn("__del", F.col("__op") == "D").drop("__op")
+
+
+class MemoryDiffState:
+    """Ephemeral twin of incstate.DiffStateTable (internal_key=True):
+    the same advance()/read_live() surface, so a retracting operator
+    advances its diff state from its materialized diff the same way
+    with or without a state_dir. Live rows keep the digest, so an
+    advance replaces rows by digest without recomputing it; each
+    advance is an eager local checkpoint (flat lineage across epochs)."""
+
+    def __init__(self, key: str):
+        self.key = key
+        self._live: DataFrame | None = None
+
+    def advance(self, changed: DataFrame, epoch: int | None = None,
+                app_id: str | None = None) -> dict:
+        live = changed.filter(~F.col("__del")).drop("__del")
+        if self._live is not None:
+            live = self._live.join(
+                maybe_broadcast(changed.select(self.key)), self.key,
+                "left_anti",
+            ).unionByName(live)
+        self._live = live.localCheckpoint(eager=True)
+        return {}
+
+    def read_live(self) -> DataFrame:
+        return self._live.drop(self.key)
 
 
 def with_op(df: DataFrame, op: str = "I", txid: int = 0, seq_col: Column | None = None) -> DataFrame:

@@ -28,13 +28,19 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dozer_spark.operators.hints import cache_materialized, maybe_broadcast
+from dozer_spark.operators.hints import (
+    cache_for_gate,
+    cache_materialized,
+    maybe_broadcast,
+)
 
 from dozer_spark.streaming.changelog import (
     CHANGELOG_COLS,
+    MemoryDiffState,
     apply_changelog,
+    diff_changelog,
+    diff_upserts,
     keys_join as _keys_join,
-    row_digest as _row_key,
 )
 
 
@@ -68,16 +74,18 @@ class RetractingJoin:
     _prev: DataFrame | None = field(default=None, init=False)  # emitted output rows
     _store: object = field(default=None, init=False)
     # previous batch's caches, released at the start of the next batch
-    # (the lazy output changelog's lineage includes them — see stateful.py)
     _prev_caches: list = field(default_factory=list, init=False)
 
     _snaptx: dict = field(default_factory=dict, init=False)  # side DiffStateTables
     _sidetx: dict = field(default_factory=dict, init=False)  # TTL DiffStateTables
-    _prevtx: object = field(default=None, init=False)  # DiffStateTable
+    # emitted rows: a DiffStateTable, or a MemoryDiffState without a
+    # state_dir
+    _prevtx: object = field(default=None, init=False)
 
     def __post_init__(self):
         if self.how not in ("inner", "left", "right"):
             raise ValueError(f"unsupported join type {self.how!r} (factory.rs:120)")
+        self._prevtx = MemoryDiffState("__ok")
         if self.state_dir is not None:
             from dozer_spark.streaming.incstate import (
                 DiffStateTable,
@@ -150,8 +158,8 @@ class RetractingJoin:
         if prev is None:
             merged = batch_snap
         else:
-            touched = changelog.select(*pk).distinct()
-            kept = prev.join(maybe_broadcast(touched), pk, "left_anti")
+            kept = prev.join(maybe_broadcast(changelog.select(*pk)), pk,
+                             "left_anti")
             merged = kept.unionByName(batch_snap)
         if self.ttl is not None and ts_col is not None:
             from dozer_spark.operators.ttl import ttl as apply_ttl
@@ -188,7 +196,7 @@ class RetractingJoin:
         # reference = max event time over the POST-batch live rows (state
         # rows the batch superseded or deleted no longer contribute) —
         # the exact reference the merged-then-filtered in-memory path uses
-        batch_keys = latest.select(*pk).distinct()
+        batch_keys = changelog.select(*pk)  # anti-joins: no distinct
         live_ts = upsert.filter(~F.col("__op_del")).select(
             F.col(ts_col).alias("__t")
         )
@@ -230,18 +238,17 @@ class RetractingJoin:
     def _dirty_keys(self, changelog: DataFrame | None, snap_before: DataFrame | None,
                     pk: list[str], key_cols: list[str]) -> DataFrame | None:
         """Join-key values touched by this batch on one side: keys of the
-        new images plus keys of the displaced old images."""
+        new images plus keys of the displaced old images (not distinct:
+        process_batch takes the union of both sides distinct once)."""
         if changelog is None:
             return None
-        new_keys = changelog.select(*key_cols)
+        keys = changelog.select(*key_cols)
         if snap_before is not None:
-            # gated broadcast of the batch's PK set (see stateful.py):
-            # ordinary batches probe the snapshot without shuffling it
-            old_keys = snap_before.join(
-                maybe_broadcast(changelog.select(*pk).distinct()), pk
-            ).select(*key_cols)
-            new_keys = new_keys.unionByName(old_keys)
-        return new_keys.distinct()
+            # gated broadcast of the batch's PK column (see stateful.py)
+            keys = keys.unionByName(snap_before.join(
+                maybe_broadcast(changelog.select(*pk)), pk, "left_semi"
+            ).select(*key_cols))
+        return keys
 
     # -- per-batch -----------------------------------------------------------
 
@@ -255,31 +262,21 @@ class RetractingJoin:
 
         for df in self._prev_caches:
             df.unpersist()
-        self._prev_caches = []
-        # materialized caches when a snapshot-probe join will be built
-        # (the probe's broadcast gate needs real stats at plan-build
-        # time — see stateful.py); first-batch sides skip the count
+        # the snapshot probes gate their broadcast hint on the batch's
+        # size at plan-build time (see stateful.py)
         if left_changelog is not None:
-            left_changelog = left_changelog.cache()
-            if self._left is not None:
-                left_changelog.count()
+            left_changelog = cache_for_gate(left_changelog)
         if right_changelog is not None:
-            right_changelog = right_changelog.cache()
-            if self._right is not None:
-                right_changelog.count()
+            right_changelog = cache_for_gate(right_changelog)
 
         dl = self._dirty_keys(left_changelog, self._left, self.left_pk, lk)
-        dr_raw = self._dirty_keys(right_changelog, self._right, self.right_pk, rk)
-        dr = None
-        if dr_raw is not None:  # normalize right-side key names to left's
-            dr = dr_raw.select(*[F.col(r).alias(l) for (l, r) in self.on])
-        dirty = dl if dr is None else (dr if dl is None else dl.unionByName(dr).distinct())
+        dr = self._dirty_keys(right_changelog, self._right, self.right_pk, rk)
+        if dr is not None:  # normalize right-side key names to left's
+            dr = dr.select(*[F.col(r).alias(l) for (l, r) in self.on])
+        dirty = dl if dr is None else (dr if dl is None else dl.unionByName(dr))
         if dirty is None:
             raise ValueError("process_batch needs at least one side's changelog")
-        # materialized cache, not localCheckpoint: a LogicalRDD reports
-        # unknown stats (defaultSizeInBytes), which would make the size
-        # gate refuse the dirty-key semi-join broadcast hint even for a
-        # one-row batch; a materialized cache reports real bytes
+        # distinct once, then materialized (see stateful.py)
         dirty = cache_materialized(dirty.distinct())
 
         if left_changelog is not None:
@@ -311,73 +308,32 @@ class RetractingJoin:
             c = lsub[l] == rsub[r]
             cond = c if cond is None else cond & c
 
-        new_out = lsub.join(rsub, cond, self.how).localCheckpoint(eager=True)
-
         # diff against previously-emitted rows for the dirty keys.
         # output identity = concatenated PKs (factory.rs:169-191), NULLs
         # preserved for padded rows.
         id_cols = [*self.left_pk, *[c for c in self.right_pk if c not in self.left_pk]]
-        data_cols = new_out.columns
-        n = new_out.select(
-            _row_key(id_cols).alias("__ok"),
-            F.struct(*[F.col(c) for c in data_cols]).alias("__new"),
-        )
-        if self._prev is None:
-            o = n.limit(0).select("__ok", F.col("__new").alias("__old"))
-        else:
-            prev_sub = self._prev_for_keys(dirty, "semi")
-            o = prev_sub.select(
-                _row_key(id_cols).alias("__ok"),
-                F.struct(*[F.col(c) for c in data_cols]).alias("__old"),
-            )
-        joined = n.join(o, "__ok", "full_outer")
-        op = (
-            F.when(F.col("__old").isNull() & F.col("__new").isNotNull(), F.lit("I"))
-            .when(F.col("__new").isNull() & F.col("__old").isNotNull(), F.lit("D"))
-            .when(F.col("__new") != F.col("__old"), F.lit("U"))
-            .otherwise(F.lit(None))
-        )
-        img = F.when(F.col("__op") == "D", F.col("__old")).otherwise(F.col("__new"))
-        diffed = (
-            joined.withColumn("__op", op)
-            .filter(F.col("__op").isNotNull())
-            .withColumn("__img", img)
-        )
-        out = (
-            diffed.select("__op", *[F.col(f"__img.{c}").alias(c) for c in data_cols])
-            # lazy: lineage is pinned frames (new_out checkpoint, prev
-            # checkpoint) — callers that discard the output changelog
-            # skip its materialization job entirely
-            .localCheckpoint(eager=False)
+        diff = diff_changelog(
+            lsub.join(rsub, cond, self.how),
+            None if self._prev is None else self._prev_for_keys(dirty),
+            id_cols, "__ok",
         )
 
-        # advance emitted-output state
+        # advance emitted-output state from the same diff: ONLY the rows
+        # it changed (O(changed) epoch IO, not an output-snapshot rewrite)
+        epoch = None if self._store is None else self._store.epoch + 1
+        meta = self._prevtx.advance(diff_upserts(diff), epoch=epoch,
+                                    app_id="rjoin_prev")
+        self._prev = self._prevtx.read_live()
         if self._store is not None:
-            # durable: merge ONLY the rows the diff changed into the
-            # digest-keyed DiffStateTable (O(changed) epoch IO, not a
-            # full output-snapshot rewrite)
-            changed = diffed.select(
-                "__ok",
-                *[F.col(f"__img.{c}").alias(c) for c in data_cols],
-                (F.col("__op") == "D").alias("__del"),
-            )
-            meta = self._prevtx.advance(changed, epoch=self._store.epoch + 1,
-                                        app_id="rjoin_prev")
-            self._prev = self._prevtx.read_live()
             self._store.stage_meta("prev_txv", meta)
             self._store.commit()  # epoch commit: all three states together
-        elif self._prev is None:
-            self._prev = self._ckpt("prev", new_out)
-        else:
-            kept = self._prev_for_keys(dirty, "anti")
-            self._prev = self._ckpt("prev", kept.unionByName(new_out))
         self._prev_caches = [
             cl for cl in (left_changelog, right_changelog) if cl is not None
         ] + [dirty]
-        return out
+        return diff.drop("__ok")
 
-    def _prev_for_keys(self, dirty: DataFrame, how: str) -> DataFrame:
-        """Filter previously-emitted rows by join-key membership. An output
+    def _prev_for_keys(self, dirty: DataFrame) -> DataFrame:
+        """Previously-emitted rows whose join key is dirty. An output
         row's join key lives on whichever side is non-NULL (outer-padded
         rows have one side all-NULL), so match on coalesce(left, right)."""
         prev = self._prev
@@ -386,8 +342,7 @@ class RetractingJoin:
         ]
         keyed = prev.select(F.struct(*[F.col(c) for c in prev.columns]).alias("__row"),
                             *key_exprs)
-        filtered = _keys_join(keyed, dirty, how)
-        return filtered.select("__row.*")
+        return _keys_join(keyed, dirty, "semi").select("__row.*")
 
     def current(self) -> DataFrame:
         if self._prev is None:

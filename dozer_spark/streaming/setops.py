@@ -19,11 +19,21 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from dozer_spark.operators.hints import cache_materialized, maybe_broadcast
+from dozer_spark.operators.hints import (
+    cache_for_gate,
+    cache_materialized,
+    maybe_broadcast,
+)
 
-from dozer_spark.streaming.changelog import CHANGELOG_COLS, apply_changelog, keys_join
+from dozer_spark.streaming.changelog import (
+    MemoryDiffState,
+    apply_changelog,
+    changelog_upserts,
+    diff_changelog,
+    diff_upserts,
+    keys_join,
+)
 
 
 @dataclass
@@ -42,14 +52,16 @@ class RetractingUnion:
     _present: DataFrame | None = field(default=None, init=False)
     _store: object = field(default=None, init=False)
     # previous batch's caches, released at the start of the next batch
-    # (the lazy output changelog's lineage includes them — see stateful.py)
     _prev_caches: list = field(default_factory=list, init=False)
 
     _snaptx: list = field(default=None, init=False)  # per-input DiffStateTables
-    _presenttx: object = field(default=None, init=False)  # DiffStateTable
+    # present values: a DiffStateTable, or a MemoryDiffState without a
+    # state_dir
+    _presenttx: object = field(default=None, init=False)
 
     def __post_init__(self):
         self._snaps = [None] * len(self.pks)
+        self._presenttx = MemoryDiffState("__pr")
         if self.state_dir is not None:
             from dozer_spark.streaming.incstate import (
                 DiffStateTable,
@@ -94,15 +106,11 @@ class RetractingUnion:
 
         for df in self._prev_caches:
             df.unpersist()
-        self._prev_caches = []
-        # materialized caches when a snapshot-probe join will be built
-        # (real stats at plan-build time — see stateful.py)
+        # the snapshot probes gate their broadcast hint on the batch's
+        # size at plan-build time (see stateful.py)
         changelogs = [
-            cl.cache() if cl is not None else None for cl in changelogs
+            cache_for_gate(cl) if cl is not None else None for cl in changelogs
         ]
-        for i, cl in enumerate(changelogs):
-            if cl is not None and self._snaps[i] is not None:
-                cl.count()
 
         # dirty values: new images + displaced old images, across inputs
         dirty = None
@@ -111,17 +119,15 @@ class RetractingUnion:
                 continue
             vals = cl.select(*self.value_cols)
             if self._snaps[i] is not None:
-                # gated broadcast of the batch's PK set (see stateful.py)
-                old = self._snaps[i].join(
-                    maybe_broadcast(cl.select(*self.pks[i]).distinct()),
-                    self.pks[i],
-                ).select(*self.value_cols)
-                vals = vals.unionByName(old)
+                # gated broadcast of the batch's PK column (see stateful.py)
+                vals = vals.unionByName(self._snaps[i].join(
+                    maybe_broadcast(cl.select(*self.pks[i])), self.pks[i],
+                    "left_semi",
+                ).select(*self.value_cols))
             dirty = vals if dirty is None else dirty.unionByName(vals)
         if dirty is None:
             raise ValueError("process_batch needs at least one changelog")
-        # materialized cache (real stats) so the dirty-value semi/anti
-        # joins below can gate their broadcast hint per batch
+        # distinct once, then materialized (see stateful.py)
         dirty = cache_materialized(dirty.distinct())
 
         # advance per-input snapshots
@@ -129,10 +135,6 @@ class RetractingUnion:
             if cl is None:
                 continue
             if self._store is not None:
-                from dozer_spark.streaming.changelog import (
-                    changelog_upserts,
-                )
-
                 upsert = changelog_upserts(cl, self.pks[i])
                 meta = self._snaptx[i].advance(
                     upsert, epoch=self._store.epoch + 1, app_id=f"snap{i}"
@@ -144,65 +146,37 @@ class RetractingUnion:
             if self._snaps[i] is None:
                 self._snaps[i] = self._ckpt(f"snap{i}", batch_snap)
             else:
-                touched = cl.select(*self.pks[i]).distinct()
-                kept = self._snaps[i].join(maybe_broadcast(touched), self.pks[i], "left_anti")
+                kept = self._snaps[i].join(
+                    maybe_broadcast(cl.select(*self.pks[i])), self.pks[i],
+                    "left_anti")
                 self._snaps[i] = self._ckpt(f"snap{i}", kept.unionByName(batch_snap))
 
         # presence for dirty values = exists in ANY input snapshot
+        # (null-safe: UNION's distinct treats NULL columns as equal —
+        # record_map compares whole records)
         new_present = None
-        for i, snap in enumerate(self._snaps):
-            if snap is None:
-                continue
-            # null-safe: UNION's distinct treats NULL columns as equal
-            # (record_map compares whole records) — plain equi-joins would
-            # silently drop any value row containing a NULL column.
-            sub = keys_join(snap.select(*self.value_cols), dirty, "semi")
-            new_present = sub if new_present is None else new_present.unionByName(sub)
-        new_present = cache_materialized(
-            new_present.distinct() if new_present is not None else dirty.limit(0)
-        )
+        for snap in self._snaps:
+            if snap is not None:
+                sub = keys_join(snap.select(*self.value_cols), dirty, "semi")
+                new_present = sub if new_present is None else new_present.unionByName(sub)
+        old_present = (None if self._present is None
+                       else keys_join(self._present, dirty, "semi"))
+        # 0->1 -> Insert; 1->0 -> Delete (operator.rs:54-80); a value is
+        # its own identity, so the diff never emits an Update
+        diff = diff_changelog(new_present.distinct(), old_present,
+                              self.value_cols, "__pr")
 
-        old_present = (
-            keys_join(self._present, dirty, "semi")
-            if self._present is not None
-            else new_present.limit(0)
-        )
-
-        # 0->1 -> Insert; 1->0 -> Delete (operator.rs:54-80)
-        inserts = keys_join(new_present, old_present, "anti").select(
-            F.lit("I").alias("__op"), *self.value_cols
-        )
-        deletes = keys_join(old_present, new_present, "anti").select(
-            F.lit("D").alias("__op"), *self.value_cols
-        )
-        # lazy (see join.py): discarded output changelogs cost nothing
-        diffed = inserts.unionByName(deletes)
-        out = diffed.localCheckpoint(eager=False)
-
-        # advance union state
+        # advance union state from the same diff: the 0->1 / 1->0
+        # transitions ARE the changed rows
+        epoch = None if self._store is None else self._store.epoch + 1
+        meta = self._presenttx.advance(diff_upserts(diff), epoch=epoch,
+                                       app_id="runion_present")
+        self._present = self._presenttx.read_live()
         if self._store is not None:
-            # durable: the 0->1 / 1->0 transitions ARE the changed rows —
-            # merge only them into the digest-keyed DiffStateTable
-            from dozer_spark.streaming.changelog import row_digest
-
-            changed = diffed.select(
-                row_digest(self.value_cols).alias("__pr"),
-                *self.value_cols,
-                (F.col("__op") == "D").alias("__del"),
-            )
-            meta = self._presenttx.advance(changed, epoch=self._store.epoch + 1,
-                                           app_id="runion_present")
-            self._present = self._presenttx.read_live()
             self._store.stage_meta("present_txv", meta)
             self._store.commit()
-        elif self._present is None:
-            self._present = self._ckpt("present", new_present)
-        else:
-            kept = keys_join(self._present, dirty, "anti")
-            self._present = self._ckpt("present", kept.unionByName(new_present))
-        self._prev_caches = [cl for cl in changelogs if cl is not None] \
-            + [dirty, new_present]
-        return out
+        self._prev_caches = [cl for cl in changelogs if cl is not None] + [dirty]
+        return diff.drop("__pr")
 
     def current(self) -> DataFrame:
         if self._present is None:

@@ -33,15 +33,20 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from dozer_spark.operators.hints import cache_materialized, maybe_broadcast
+from dozer_spark.operators.hints import (
+    cache_for_gate,
+    cache_materialized,
+    maybe_broadcast,
+)
 
 from dozer_spark.streaming.changelog import (
+    MemoryDiffState,
     apply_changelog,
     changelog_upserts,
+    diff_changelog,
+    diff_upserts,
     keys_join,
-    row_digest,
 )
 
 
@@ -73,14 +78,14 @@ class RetractingAggregation:
     _state: DataFrame | None = field(default=None, init=False)  # aggregate rows
     _store: object = field(default=None, init=False)
     _snaptx: object = field(default=None, init=False)  # DiffStateTable
-    _aggtx: object = field(default=None, init=False)  # DiffStateTable
-    # caches from the PREVIOUS batch, released at the START of the next:
-    # the returned output changelog is lazy and its lineage includes
-    # these — unpersisting them before the caller's first action would
-    # force a full recompute of the dirty-group aggregation
+    # aggregate rows: a DiffStateTable, or a MemoryDiffState without
+    # a state_dir
+    _aggtx: object = field(default=None, init=False)
+    # the previous batch's caches, released at the start of the next
     _prev_caches: list = field(default_factory=list, init=False)
 
     def __post_init__(self):
+        self._aggtx = MemoryDiffState("__gk")
         if self.state_dir is not None:
             from dozer_spark.streaming.incstate import (
                 DiffStateTable,
@@ -142,35 +147,26 @@ class RetractingAggregation:
         the aggregation (rows = aggregate records with __op I/U/D)."""
         for df in self._prev_caches:
             df.unpersist()
-        self._prev_caches = []
-        changelog = changelog.cache()
-        if self._snapshot is not None:
-            # materialize the cache NOW: the snapshot-probe join built
-            # below gates its broadcast hint at plan-build time, and only
-            # a materialized InMemoryRelation reports the batch's REAL
-            # bytes (a lazy cache inherits the child's estimate —
-            # Long.MaxValue for checkpoint-backed changelogs, which would
-            # refuse the hint for every ordinary batch). First batch has
-            # no probe join, so the count is skipped there.
-            changelog.count()
+        # the snapshot probe below gates its broadcast hint on the
+        # batch's size at plan-build time (see cache_for_gate)
+        changelog = cache_for_gate(changelog)
 
         # 1. dirty group keys = keys of new images + keys of old images
-        new_keys = changelog.select(*self.group_by)
+        dirty = changelog.select(*self.group_by)
         if self._snapshot is not None:
-            # gated broadcast of the batch's PK set: an ordinary batch
-            # probes the snapshot without shuffling it; a corpus-sized
-            # backfill batch fails the gate and AQE plans the join
-            old_keys = self._snapshot.join(
-                maybe_broadcast(changelog.select(*self.pk).distinct()), self.pk
-            ).select(*self.group_by)
-            dirty = new_keys.unionByName(old_keys).distinct()
-        else:
-            dirty = new_keys.distinct()
-        # materialized cache (not just .cache()): the dirty-key semi/anti
-        # joins below gate their broadcast hint on this frame's stats, and
-        # only a materialized InMemoryRelation reports REAL bytes — a lazy
-        # cache inherits the snapshot-join child's unknown estimate
-        dirty = cache_materialized(dirty)
+            # gated broadcast of the batch's PK column: an ordinary
+            # batch probes the snapshot without shuffling it; a
+            # corpus-sized backfill batch fails the gate and AQE plans
+            # the join. A semi-join never fans out, so the PK column
+            # needs no distinct.
+            dirty = dirty.unionByName(self._snapshot.join(
+                maybe_broadcast(changelog.select(*self.pk)), self.pk,
+                "left_semi",
+            ).select(*self.group_by))
+        # distinct once, then materialized: the dirty-key joins below
+        # plan from its real size (measured: fewer jobs and tasks than
+        # leaving the cache to build inside the diff)
+        dirty = cache_materialized(dirty.distinct())
 
         # 2. update the input snapshot (replay semantics of record_store.rs)
         if self._store is not None:
@@ -189,92 +185,35 @@ class RetractingAggregation:
             if self._snapshot is None:
                 merged = batch_snapshot
             else:
-                touched = changelog.select(*self.pk).distinct()
                 kept = self._snapshot.join(
-                    maybe_broadcast(touched), self.pk, "left_anti")
+                    maybe_broadcast(changelog.select(*self.pk)), self.pk,
+                    "left_anti")
                 merged = kept.unionByName(batch_snapshot)
             # materialize to break lineage growth across batches
             merged = self._ckpt("snapshot", merged)
         self._snapshot = merged
 
-        # 3. recompute aggregates for dirty groups only. Lazy cache, not
-        # an eager checkpoint: the frame is consumed by the diff AND the
-        # state advance below — the cache deduplicates the recompute, and
-        # the state advance's own _ckpt breaks lineage for the next
-        # batch, so an extra materialization job here buys nothing
-        new_agg = self._agg_for(merged, dirty).cache()
+        # 3. recompute aggregates for dirty groups only, and 4. diff
+        # them against the previous state for those groups -> the one
+        # materialized I/U/D diff of this batch
+        old_agg = (None if self._state is None
+                   else keys_join(self._state, dirty, "semi"))
+        diff = diff_changelog(self._agg_for(merged, dirty), old_agg,
+                              self.group_by, "__gk")
 
-        # 4. diff vs previous state for those groups -> I/U/D changelog
-        agg_cols = [c for c in new_agg.columns if c not in self.group_by]
-        if self._state is None:
-            old_agg = new_agg.limit(0)
-        else:
-            old_agg = keys_join(self._state, dirty, "semi")
-
-        # diff on a null-distinguishing digest of the group key so a
-        # NULL-keyed group pairs old-vs-new instead of splitting D+I
-        n = new_agg.select(
-            row_digest(self.group_by).alias("__gk"),
-            F.struct(*[F.col(c) for c in self.group_by]).alias("__nkeys"),
-            F.struct(*[F.col(c) for c in agg_cols]).alias("__new"),
-        )
-        o = old_agg.select(
-            row_digest(self.group_by).alias("__gk"),
-            F.struct(*[F.col(c) for c in self.group_by]).alias("__okeys"),
-            F.struct(*[F.col(c) for c in agg_cols]).alias("__old"),
-        )
-        joined = n.join(o, "__gk", "full_outer")
-        op = (
-            F.when(F.col("__old").isNull() & F.col("__new").isNotNull(), F.lit("I"))
-            .when(F.col("__new").isNull() & F.col("__old").isNotNull(), F.lit("D"))
-            .when(F.col("__new") != F.col("__old"), F.lit("U"))
-            .otherwise(F.lit(None))
-        )
-        image = F.when(F.col("__op") == "D", F.col("__old")).otherwise(F.col("__new"))
-        keys_img = F.when(F.col("__op") == "D", F.col("__okeys")).otherwise(F.col("__nkeys"))
-        diffed = (
-            joined.withColumn("__op", op)
-            .filter(F.col("__op").isNotNull())
-            .withColumn("__img", image)
-            .withColumn("__kimg", keys_img)
-        )
-        out = diffed.select(
-            "__op",
-            *[F.col(f"__kimg.{c}").alias(c) for c in self.group_by],
-            *[F.col(f"__img.{c}").alias(c) for c in agg_cols],
-        )
-        # the output changelog stays LAZY: its whole lineage is pinned
-        # frames (the staged snapshot, the cached new_agg, the previous
-        # state's checkpoint), so collecting it later is safe and batches
-        # that discard their output changelog pay nothing for it
-        out = out.localCheckpoint(eager=False)
-
-        # 5. advance aggregate state
+        # 5. advance aggregate state from the same diff: ONLY the changed
+        # groups (O(dirty) write IO per epoch). D rows delete their
+        # digest; I/U upsert the new image.
+        epoch = None if self._store is None else self._store.epoch + 1
+        meta = self._aggtx.advance(diff_upserts(diff), epoch=epoch,
+                                   app_id="ragg_agg")
+        self._state = self._aggtx.read_live()
         if self._store is not None:
-            # durable: merge ONLY the changed groups (the diff rows) into
-            # the digest-keyed DiffStateTable — O(dirty) write IO per
-            # epoch instead of a full aggregate-table rewrite. D rows
-            # delete their digest; I/U upsert the new image.
-            changed = diffed.select(
-                "__gk",
-                *[F.col(f"__kimg.{c}").alias(c) for c in self.group_by],
-                *[F.col(f"__img.{c}").alias(c) for c in agg_cols],
-                (F.col("__op") == "D").alias("__del"),
-            )
-            meta = self._aggtx.advance(changed, epoch=self._store.epoch + 1,
-                                       app_id="ragg_agg")
-            self._state = self._aggtx.read_live()
             # bind the log position to the epoch: the crash-rewind anchor
             self._store.stage_meta("agg_txv", meta)
             self._store.commit()  # epoch commit: both states become visible
-        elif self._state is None:
-            self._state = self._ckpt("aggstate", new_agg)
-        else:
-            kept = keys_join(self._state, dirty, "anti")
-            self._state = self._ckpt("aggstate", kept.unionByName(new_agg))
-        # released at the start of the NEXT batch (see _prev_caches)
-        self._prev_caches = [changelog, dirty, new_agg]
-        return out
+        self._prev_caches = [changelog, dirty]
+        return diff.drop("__gk")
 
     def current(self) -> DataFrame:
         """Current materialized aggregate table."""
