@@ -151,10 +151,16 @@ def cache_for_gate(df: DataFrame) -> DataFrame:
     InMemoryRelation reports real bytes. The estimate is read off a
     fresh projection: a frame keeps the stats of its first planning."""
     c = df.cache()
-    est = estimated_plan_bytes(c.select("*"))
-    if est is None or est > BROADCAST_GATE_BYTES:
+    if fails_broadcast_gate(c):
         c.count()
     return c
+
+
+def fails_broadcast_gate(df: DataFrame) -> bool:
+    """True when Catalyst's estimate of df (read off a fresh projection)
+    is unknown or above BROADCAST_GATE_BYTES."""
+    est = estimated_plan_bytes(df.select("*"))
+    return est is None or est > BROADCAST_GATE_BYTES
 
 
 # Catalyst's defaultSize for ArrayType/MapType is ONE element's width,

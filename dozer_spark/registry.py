@@ -63,6 +63,10 @@ _SCHEMA_CACHE: dict[tuple, tuple] = {}
 _READER_CACHE: dict[tuple, tuple] = {}
 
 
+def _walk_error(err: OSError) -> None:
+    raise err
+
+
 def _path_sig(path: str) -> tuple | None:
     """Stat-based cache key; None (uncacheable) when stat fails.
 
@@ -70,11 +74,23 @@ def _path_sig(path: str) -> tuple | None:
     file overwritten in place inside a nested partition subdirectory
     (key=v/part-*.parquet) changes neither the top-level entry names
     nor the subdir mtime, so a one-level signature would serve a stale
-    schema for partitioned layouts."""
+    schema for partitioned layouts. The walk follows symlinked
+    subdirectories (the reader lists their files too), and a directory
+    it cannot list fails the signature instead of leaving a partial one.
+    A directory reached twice (a symlink back to an ancestor, or two
+    links to one target) also gives None: os.walk has no loop check, so
+    a loop would otherwise be walked down to the ELOOP depth (about 40
+    levels, each listing and stat-ing the table's files)."""
     try:
         if os.path.isdir(path):
             parts = []
-            for root, dirs, files in os.walk(path):
+            seen = set()
+            for root, dirs, files in os.walk(path, onerror=_walk_error,
+                                             followlinks=True):
+                d = os.stat(root)
+                if (d.st_dev, d.st_ino) in seen:
+                    return None
+                seen.add((d.st_dev, d.st_ino))
                 dirs.sort()
                 for name in files:
                     st = os.stat(os.path.join(root, name))

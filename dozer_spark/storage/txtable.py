@@ -534,12 +534,13 @@ class TransactionalTable:
         # cluster the write by bucket: without this every post-join task
         # (spark.sql.shuffle.partitions of them) opens a file in EVERY
         # (__dest, __b) partition dir — tasks x buckets tiny files, which
-        # slows the write AND every later footer-stats/bucket read. One
-        # task per touched bucket writes one file per dir; parallelism at
-        # scale comes from n_buckets (the deployment's sizing lever),
-        # exactly as for any bucketed table. The clustering shuffle moves
-        # only the touched buckets' rows.
-        combined = combined.repartition(max(len(touched), 1), "__b")
+        # slows the write AND every later footer-stats/bucket read.
+        # Hashing on __b puts each bucket in exactly one task, so each
+        # dir gets one file; with no fixed count AQE sizes the tasks by
+        # bytes (one task for a small epoch, up to
+        # spark.sql.shuffle.partitions at scale). The clustering shuffle
+        # moves only the touched buckets' rows.
+        combined = combined.repartition("__b")
         combined.write.mode("overwrite").partitionBy("__dest", "__b").parquet(
             os.path.join(self.path, vdir)
         )
@@ -660,9 +661,9 @@ class TransactionalTable:
             )
 
         vdir = os.path.join("buckets", f"v{new_version:06d}")
-        # same write clustering as merge: one task per bucket hash so a
+        # same write clustering as merge: each bucket in one task, so a
         # bucket gets ONE new file, not tasks-many tiny ones
-        combined = combined.repartition(self.n_buckets, "__b")
+        combined = combined.repartition("__b")
         combined.write.mode("overwrite").partitionBy("__dest", "__b").parquet(
             os.path.join(self.path, vdir)
         )

@@ -15,7 +15,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dozer_spark.operators.hints import maybe_broadcast
+from dozer_spark.operators.hints import (
+    cache_materialized,
+    fails_broadcast_gate,
+    maybe_broadcast,
+)
 
 CHANGELOG_COLS = ["__op", "__txid", "__seq"]
 
@@ -39,8 +43,8 @@ def keys_join(df: DataFrame, keys: DataFrame, how: str,
     The broadcast hint on the key side is SIZE-GATED, not pinned: the
     dirty-key set is bounded by the micro-batch in steady state, but a
     first backfill batch is corpus-sized — an unconditional hint would
-    OOM the build side at scale. Callers materialize key sets
-    (cache_materialized), so the gate reads real bytes and decides per
+    OOM the build side at scale. Callers pass key sets built by
+    materialize_keys, so the gate reads real bytes and decides per
     batch; when the gate refuses, AQE still picks a broadcast at runtime
     if the actual size allows.
     """
@@ -55,6 +59,23 @@ def keys_join(df: DataFrame, keys: DataFrame, how: str,
         e = df[kc].eqNullSafe(kdf[f"__k_{kc}"])
         c = e if c is None else c & e
     return df.join(kdf, c, how)
+
+
+def materialize_keys(keys: DataFrame) -> DataFrame:
+    """A retracting operator's dirty-key set, ready for keys_join: taken
+    distinct once, then an eager local checkpoint, so AQE coalesces it
+    (1 partition at epoch sizes) and every later broadcast of it is a
+    1-task scan. A cache of the distinct would keep its
+    spark.sql.shuffle.partitions partitions: a cached plan's final stage
+    is never coalesced. The checkpoint keeps only the plan's static
+    estimate, and a key set probed from a state (a semi-join) is
+    estimated at the whole state's size; when that estimate fails the
+    gate, the checkpoint is cached and counted so the gate reads real
+    bytes. (A lazy cache on every epoch instead costs about 14 more
+    jobs per steady join->aggregation epoch.) Release it with
+    unpersist() after the epoch."""
+    ck = keys.distinct().localCheckpoint(eager=True)
+    return cache_materialized(ck) if fails_broadcast_gate(ck) else ck
 
 
 def row_digest(cols: list[str], prefix: str = "") -> Column:

@@ -28,11 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dozer_spark.operators.hints import (
-    cache_for_gate,
-    cache_materialized,
-    maybe_broadcast,
-)
+from dozer_spark.operators.hints import cache_for_gate, maybe_broadcast
 
 from dozer_spark.streaming.changelog import (
     CHANGELOG_COLS,
@@ -41,6 +37,7 @@ from dozer_spark.streaming.changelog import (
     diff_changelog,
     diff_upserts,
     keys_join as _keys_join,
+    materialize_keys,
 )
 
 
@@ -276,8 +273,7 @@ class RetractingJoin:
         dirty = dl if dr is None else (dr if dl is None else dl.unionByName(dr))
         if dirty is None:
             raise ValueError("process_batch needs at least one side's changelog")
-        # distinct once, then materialized (see stateful.py)
-        dirty = cache_materialized(dirty.distinct())
+        dirty = materialize_keys(dirty)
 
         if left_changelog is not None:
             self._left = self._merge("left", self._left, left_changelog,

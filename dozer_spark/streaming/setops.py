@@ -20,11 +20,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dozer_spark.operators.hints import (
-    cache_for_gate,
-    cache_materialized,
-    maybe_broadcast,
-)
+from dozer_spark.operators.hints import cache_for_gate, maybe_broadcast
 
 from dozer_spark.streaming.changelog import (
     MemoryDiffState,
@@ -33,6 +29,7 @@ from dozer_spark.streaming.changelog import (
     diff_changelog,
     diff_upserts,
     keys_join,
+    materialize_keys,
 )
 
 
@@ -127,8 +124,7 @@ class RetractingUnion:
             dirty = vals if dirty is None else dirty.unionByName(vals)
         if dirty is None:
             raise ValueError("process_batch needs at least one changelog")
-        # distinct once, then materialized (see stateful.py)
-        dirty = cache_materialized(dirty.distinct())
+        dirty = materialize_keys(dirty)
 
         # advance per-input snapshots
         for i, cl in enumerate(changelogs):

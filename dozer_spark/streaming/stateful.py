@@ -34,11 +34,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from dozer_spark.operators.hints import (
-    cache_for_gate,
-    cache_materialized,
-    maybe_broadcast,
-)
+from dozer_spark.operators.hints import cache_for_gate, maybe_broadcast
 
 from dozer_spark.streaming.changelog import (
     MemoryDiffState,
@@ -47,6 +43,7 @@ from dozer_spark.streaming.changelog import (
     diff_changelog,
     diff_upserts,
     keys_join,
+    materialize_keys,
 )
 
 
@@ -163,10 +160,7 @@ class RetractingAggregation:
                 maybe_broadcast(changelog.select(*self.pk)), self.pk,
                 "left_semi",
             ).select(*self.group_by))
-        # distinct once, then materialized: the dirty-key joins below
-        # plan from its real size (measured: fewer jobs and tasks than
-        # leaving the cache to build inside the diff)
-        dirty = cache_materialized(dirty.distinct())
+        dirty = materialize_keys(dirty)
 
         # 2. update the input snapshot (replay semantics of record_store.rs)
         if self._store is not None:

@@ -12,7 +12,9 @@ for a uniform window is the whole accumulated state. Pins:
 - batch_id idempotency (a replayed append no-ops);
 - DiffStateTable routes all-fresh windows through append_fresh and
   mixed/tombstone windows through merge, with identical read_live
-  results either way.
+  results either way;
+- a batch spread over many partitions still writes ONE file per touched
+  bucket dir, through merge and append_fresh alike.
 """
 
 from __future__ import annotations
@@ -105,6 +107,79 @@ def test_append_fresh_cdf_time_travel_and_batch_id(spark, tmp_path):
         [("d2", "b", 2), ("d3", "c", 3)], ["digest", "k", "v"]),
         batch_id=2, app_id="x")
     assert t.version == v and t.read().count() == 3
+
+
+def _new_files_per_bucket(t, before: dict) -> dict:
+    """Touched bucket -> parquet files in its data dir that are not in
+    its dir from `before` (the bucket map ahead of the last write), so
+    files append_fresh hardlinked forward, which keep their names, do
+    not count; `before={}` counts every file."""
+    vdir = os.path.join("buckets", f"v{t.version:06d}")
+    out = {}
+    for b, rel in t._buckets.items():
+        if not rel.startswith(vdir):
+            continue  # untouched: carried by reference
+        old = before.get(b)
+        old_files = set(os.listdir(os.path.join(t.path, old))) if old else set()
+        out[b] = [fn for fn in os.listdir(os.path.join(t.path, rel))
+                  if fn.endswith(".parquet") and fn not in old_files]
+    return out
+
+
+def test_multi_partition_batches_write_one_file_per_bucket(spark, tmp_path):
+    """The sink clusters its write by bucket with no fixed task count: a
+    batch spread over many partitions still writes exactly one file into
+    each touched bucket dir, and every row reads back."""
+    cols = ["digest", "k", "v"]
+
+    def batch(rows, extra=None):
+        df = spark.createDataFrame(rows, cols if extra is None else cols + [extra])
+        return df.repartition(8)
+
+    rows = {f"d{i}": (f"key{i % 9}", i) for i in range(60)}
+    t = TransactionalTable(spark, str(tmp_path / "mg"), pk=["digest"],
+                           n_buckets=8, bucket_cols=["k"])
+    t.merge(batch([(d, k, v) for d, (k, v) in rows.items()]))
+    files = _new_files_per_bucket(t, {})
+    assert len(files) >= 3
+    assert all(len(fs) == 1 for fs in files.values()), files
+
+    # second merge: updates, deletes and inserts across the buckets;
+    # merge rewrites each touched bucket, so its dir holds one file
+    upd = [(d, rows[d][0], -rows[d][1], False) for d in ("d1", "d2", "d5", "d13")]
+    dels = [(d, rows[d][0], 0, True) for d in ("d3", "d20", "d31")]
+    ins = [(f"n{i}", f"key{i}", 500 + i, False) for i in range(5)]
+    t.merge(batch(upd + dels + ins, "__del"), delete_col="__del")
+    files = _new_files_per_bucket(t, {})
+    assert len(files) >= 3
+    assert all(len(fs) == 1 for fs in files.values()), files
+    for d, k, v, _ in upd + ins:
+        rows[d] = (k, v)
+    for d, *_ in dels:
+        del rows[d]
+    assert _rows(t.read()) == sorted((d, k, v) for d, (k, v) in rows.items())
+    ch = t.read_changes(since_version=2).collect()
+    assert sorted((r["digest"], r["_change_type"]) for r in ch) == sorted(
+        [(d, "update_preimage") for d, *_ in upd]
+        + [(d, "update_postimage") for d, *_ in upd]
+        + [(d, "delete") for d, *_ in dels]
+        + [(d, "insert") for d, *_ in ins])
+
+    # append_fresh: first write into an empty table, then a second one
+    # whose touched buckets also carry their earlier file forward
+    a = TransactionalTable(spark, str(tmp_path / "ap"), pk=["digest"],
+                           n_buckets=8, bucket_cols=["k"])
+    fresh = [[(f"a{e}_{i}", f"key{i % 9}", e * 100 + i) for i in range(40)]
+             for e in range(2)]
+    for e, rs in enumerate(fresh):
+        before = dict(a._buckets)
+        a.append_fresh(batch(rs))
+        files = _new_files_per_bucket(a, before)
+        assert len(files) >= 3
+        assert all(len(fs) == 1 for fs in files.values()), files
+        assert _rows(a.read_changes(since_version=e + 1)) == sorted(
+            (*r, "insert", e + 1) for r in rs)
+    assert _rows(a.read()) == sorted(fresh[0] + fresh[1])
 
 
 def _mk(spark, path, append_mode=True, compact_every=2):

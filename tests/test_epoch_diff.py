@@ -4,10 +4,12 @@
   RetractingJoin -> RetractingAggregation chain emit the same output
   changelog every epoch, across a compaction of the durable diff state
   and with updates that move rows between groups.
-- A job budget pins the Spark jobs of one steady durable `process_batch`
-  per operator: a second computation of the diff (for the state advance)
-  or a count of an input whose size Catalyst already knows shows up as
-  extra jobs.
+- A job and task budget pins the Spark work of one steady durable
+  `process_batch` per operator: a second computation of the diff (for
+  the state advance) or a count of an input whose size Catalyst already
+  knows shows up as extra jobs, and a small frame read at the full
+  shuffle-partition count (AQE never coalesces a cached plan's output
+  partitions) shows up as extra tasks.
 - keys_join is semi/anti only.
 """
 
@@ -136,7 +138,8 @@ _groups = itertools.count()
 
 
 def _jobs(spark, group: str, fn):
-    """fn() under a fresh job group; its result and Spark job count."""
+    """fn() under a fresh job group; its result and the group's Spark
+    (jobs, completed tasks)."""
     group = f"{group}-{next(_groups)}"
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -145,15 +148,21 @@ def _jobs(spark, group: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [tracker.getStageInfo(s)
+              for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    tasks = sum(st.numCompletedTasks for st in stages if st is not None)
+    return out, (len(jobs), tasks)
 
 
-# Spark jobs of one steady durable process_batch on the stream below,
-# its inputs cached and counted by the caller (as a pipeline does).
-# With a second diff computation and redundant counts: join 31,
-# aggregation 22.
-JOIN_JOB_BUDGET = 22
-AGG_JOB_BUDGET = 16
+# Spark (jobs, tasks) of one steady durable process_batch on the stream
+# below, its inputs cached and counted by the caller (as a pipeline
+# does). With a second diff computation and redundant counts: join 31
+# jobs, aggregation 22. With the dirty-key set cached instead of
+# checkpointed: join 22 jobs / 150 tasks, aggregation 16 / 93.
+JOIN_BUDGET = (16, 48)
+AGG_BUDGET = (12, 20)
 
 
 def test_steady_durable_epoch_job_budget(spark, tmp_path):
@@ -170,8 +179,10 @@ def test_steady_durable_epoch_job_budget(spark, tmp_path):
         ain.count()
         _, jobs["agg"] = _jobs(spark, "epoch-diff-agg",
                                lambda: agg.process_batch(ain))
-    assert jobs["join"] <= JOIN_JOB_BUDGET, jobs
-    assert jobs["agg"] <= AGG_JOB_BUDGET, jobs
+    for op, (max_jobs, max_tasks) in (("join", JOIN_BUDGET),
+                                      ("agg", AGG_BUDGET)):
+        assert jobs[op][0] <= max_jobs, jobs
+        assert jobs[op][1] <= max_tasks, jobs
 
 
 def test_keys_join_rejects_fan_out_joins(spark):

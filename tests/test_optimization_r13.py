@@ -216,6 +216,79 @@ def test_reader_memo_invalidates_on_rewrite(spark, tmp_path):
     assert df2.count() == 9, "reader memo served a stale frame"
 
 
+def test_path_sig_fails_on_unlistable_subdir(tmp_path, monkeypatch):
+    """A subdirectory the walk cannot list makes the signature None
+    (uncacheable), never a signature of the partial listing."""
+    import os
+
+    from dozer_spark.registry import _path_sig
+
+    (tmp_path / "k=1").mkdir()
+    (tmp_path / "k=1" / "part-0.parquet").write_bytes(b"x")
+    (tmp_path / "k=2").mkdir()
+    (tmp_path / "k=2" / "part-0.parquet").write_bytes(b"y")
+    assert _path_sig(str(tmp_path)) is not None
+
+    real_scandir = os.scandir
+
+    def scandir(p="."):
+        if os.fspath(p).endswith("k=2"):
+            raise PermissionError(13, "Permission denied", os.fspath(p))
+        return real_scandir(p)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    assert _path_sig(str(tmp_path)) is None
+
+
+def test_path_sig_follows_symlinked_subdir(tmp_path):
+    """Files under a symlinked subdirectory are part of the signature:
+    rewriting one changes it."""
+    import os
+
+    from dozer_spark.registry import _path_sig
+
+    table, outside = tmp_path / "table", tmp_path / "outside"
+    table.mkdir()
+    outside.mkdir()
+    (table / "k=1").mkdir()
+    (table / "k=1" / "part-0.parquet").write_bytes(b"x")
+    (outside / "part-0.parquet").write_bytes(b"y")
+    os.symlink(outside, table / "k=2")
+
+    sig = _path_sig(str(table))
+    assert any(p.endswith(os.path.join("k=2", "part-0.parquet"))
+               for p, *_ in sig[1])
+    (outside / "part-0.parquet").write_bytes(b"longer")
+    assert _path_sig(str(table)) != sig
+
+
+def test_path_sig_stops_at_symlink_loop(tmp_path, monkeypatch):
+    """Links from inside the table back to its root give None after
+    listing the root once, not after a walk down to the ELOOP depth
+    (about 40 levels, each listing and stat-ing the table's files)."""
+    import os
+
+    from dozer_spark.registry import _path_sig
+
+    (tmp_path / "k=1").mkdir()
+    (tmp_path / "k=1" / "part-0.parquet").write_bytes(b"x")
+    os.symlink(tmp_path, tmp_path / "k=1" / "up")
+    os.symlink(tmp_path, tmp_path / "back")
+
+    listed = []
+    real_scandir = os.scandir
+
+    def scandir(p="."):
+        listed.append(os.fspath(p))
+        if len(listed) > 50:  # a missing loop check fails, not hangs
+            raise AssertionError("walk did not stop at the loop")
+        return real_scandir(p)
+
+    monkeypatch.setattr(os, "scandir", scandir)
+    assert _path_sig(str(tmp_path)) is None
+    assert len(listed) <= 3
+
+
 def test_minhash_sigs_cache_survives_sql_templates(spark, docs):
     """The persisted slim signature table must still be IN the final
     pair plan as an InMemoryRelation: a template arg whose plan

@@ -180,6 +180,42 @@ def test_dirty_key_semi_join_broadcast_is_gated_aggregation(spark, monkeypatch):
     assert rows_small == rows_big and len(rows_small) > 0
 
 
+def test_dirty_key_broadcast_gates_on_real_bytes_not_state_estimate(
+        spark, monkeypatch):
+    """A steady batch's dirty-key set is a few keys, but it is probed
+    from the snapshot through a semi-join, which Catalyst estimates at
+    the snapshot's size. With the gate between the two, every dirty-key
+    join must still broadcast: the key set has to report its real bytes,
+    or a large state loses the broadcast and shuffles every epoch."""
+    from dozer_spark.operators import hints
+    from dozer_spark.streaming import stateful as st
+
+    gate = 64 << 10
+    ragg = st.RetractingAggregation(
+        spark, pk=["id"], group_by=["grp"], aggs=[F.sum("amount").alias("s")],
+    )
+    ragg.process_batch(spark.range(20000).select(
+        F.lit("I").alias("__op"), F.lit(1).cast("long").alias("__txid"),
+        F.col("id").alias("__seq"), F.col("id"),
+        (F.col("id") % 4).cast("string").alias("grp"),
+        F.col("id").cast("double").alias("amount"),
+    ))
+    assert estimated_plan_bytes(ragg._snapshot.select("grp")) > gate
+
+    monkeypatch.setattr(hints, "BROADCAST_GATE_BYTES", gate)
+    plans = _capture_keys_join(monkeypatch, st)
+    out = ragg.process_batch(spark.createDataFrame(
+        [("U", 2, 1, 1, "1", 9.0), ("D", 2, 2, 6, "2", 6.0)],
+        "__op string, __txid long, __seq long, id long, grp string, amount double",
+    ))
+    assert len(plans) == 2
+    assert all("strategy=broadcast" in p for p in plans)
+    assert sorted((r["__op"], r["grp"], r["s"]) for r in out.collect()) == [
+        ("U", "1", sum(range(1, 20000, 4)) - 1 + 9.0),
+        ("U", "2", sum(range(2, 20000, 4)) - 6.0),
+    ]
+
+
 def test_dirty_key_semi_join_broadcast_is_gated_join(spark, monkeypatch):
     from dozer_spark.operators import hints
     from dozer_spark.streaming import join as sj

@@ -3,10 +3,15 @@ that launched them.
 
 Runs the benchmark's `cdc_join_agg` pipeline (wal2json source -> durable
 RetractingJoin -> durable RetractingAggregation -> TransactionalTable
-merge sink, `perfbench/cdc.py`) for the backfill epoch and one steady
-epoch, then prints the steady epoch's jobs per call site, busiest first:
+merge sink, `perfbench/cdc.py`) for the backfill epoch and N steady
+epochs, then prints the N-th steady epoch's jobs per call site, busiest
+first:
 
-    python tools/epoch_jobs.py [--seed 21] [--changes 500] [--cores 4]
+    python tools/epoch_jobs.py [--seed 21] [--changes 500] [--cores 4] [--epoch 1]
+
+Later epochs carry more pending state deltas (not yet compacted), so
+comparing `--epoch 1` with `--epoch 3` attributes the jobs each pending
+delta adds to the call sites that read it.
 
 A call site is the innermost `dozer_spark/` or `perfbench/` frame on the
 Python stack when a py4j call is made, followed by its nearest caller in
@@ -107,7 +112,12 @@ def main(argv=None) -> int:
                     help="order changes in the steady epoch "
                          "(default: the benchmark's)")
     ap.add_argument("--cores", default=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    ap.add_argument("--epoch", type=int, default=1,
+                    help="which steady epoch to census (1 = the first "
+                         "after the backfill)")
     args = ap.parse_args(argv)
+    if args.epoch < 1:
+        ap.error("--epoch must be at least 1")
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cores)
 
     from dozer_spark import get_spark
@@ -127,17 +137,19 @@ def main(argv=None) -> int:
         stream = gen.CdcStream(args.seed, cfg["customers"], cfg["orders"],
                                cfg["changes"], cfg["segment_moves"])
         paths = []
-        for e, lines in enumerate((stream.backfill(), stream.epoch())):
+        for e in range(args.epoch + 1):
             paths.append(os.path.join(work, f"epoch{e}.json"))
-            gen.write_lines(paths[-1], lines)
+            gen.write_lines(paths[-1],
+                            stream.backfill() if e == 0 else stream.epoch())
         pipe = cdc._Pipeline(spark, os.path.join(work, "state"))
         untraced = Tracer(spark, enabled=False)
-        pipe.epoch(untraced, paths[0], 0)
+        for e in range(args.epoch):
+            pipe.epoch(untraced, paths[e], e)
 
         hook = CallSiteGroups(spark.sparkContext)
         sys.setprofile(hook)
         try:
-            pipe.epoch(untraced, paths[1], 1)
+            pipe.epoch(untraced, paths[-1], args.epoch)
         finally:
             sys.setprofile(None)
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
@@ -149,7 +161,7 @@ def main(argv=None) -> int:
         for jobs, tasks, site in rows:
             print(f"{jobs:>5} {tasks:>6}  {site}")
         print(f"{sum(r[0] for r in rows):>5} {sum(r[1] for r in rows):>6}"
-              "  total (steady epoch)")
+              f"  total (steady epoch {args.epoch})")
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
