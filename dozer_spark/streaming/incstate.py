@@ -20,11 +20,14 @@ work must be O(batch), not O(state).
   I/U/D diff the operator already computed) are appended as ONE small
   parquet delta — a single write job, O(changed) bytes;
 - **every `compact_every` epochs**: the pending deltas are reduced
-  (latest image per digest wins) and MERGEd into the bucketed base
+  (each key's newest delta wins) and MERGEd into the bucketed base
   table — two jobs, touched buckets only, amortized across the window;
-- **reads** reconstruct the live state as base ⊕ pending deltas (an
-  anti-join + union per pending delta; the chain is bounded by
-  `compact_every`, so plans stay flat across epochs).
+- **reads** reconstruct the live state as base ⊕ pending deltas in one
+  pass: the pending deltas are stacked once, each key keeps the rows of
+  the newest delta that names it, and the base is anti-joined once
+  against every pending key — so a read costs the same Spark work at
+  every pending count. Compaction reduces with the same latest-delta
+  rule (`_latest`).
 
 Crash contract (the reference's epoch-commit semantics, dozer-core
 checkpoint.rs): the StateStore manifest commit is the epoch boundary;
@@ -145,12 +148,9 @@ class DiffStateTable:
         self._compacted_prev: list[int] = []
         # per-epoch fresh-keys flags (see advance): True = the delta is
         # pure inserts whose keys exist nowhere else in the log, so
-        # reads may union it without the per-delta anti-join
+        # reads union it without the latest-delta window or the base
+        # anti-join
         self._fresh: dict[int, bool] = {}
-        # all-fresh windows compact via TransactionalTable.append_fresh
-        # (O(window), no bucket rewrite); False forces the merge path
-        # everywhere (the A/B lever for scale evidence runs)
-        self.append_fresh_compaction = True
 
     # -- paths ---------------------------------------------------------------
 
@@ -175,10 +175,10 @@ class DiffStateTable:
         (no `__del` rows) whose keys appear nowhere else in the log —
         true for every append-only streaming-index epoch, where new
         rows are keyed by digests over just-arrived ids that passed the
-        seen filter. Reads then union the delta WITHOUT the per-delta
-        anti-join (a shuffle of the accumulated state per pending
-        delta), which is what keeps bucket-pruned probe reads
-        shuffle-free. Epochs that tombstone or overwrite (TTL prunes,
+        seen filter. Reads then union the delta WITHOUT the
+        latest-delta window or the base anti-join (each a shuffle),
+        which is what keeps bucket-pruned probe reads shuffle-free.
+        Epochs that tombstone or overwrite (TTL prunes,
         re-sent-document rewrites) must leave it False."""
         if self._schema_json is None:
             self._schema_json = changed.schema.json()
@@ -198,19 +198,20 @@ class DiffStateTable:
                           for e in self._pending}}
 
     def _compact(self, epoch: int, app_id: str) -> None:
-        """Fold the pending deltas into the bucketed base: latest image
-        per digest wins (a later D after an earlier I reduces to the
-        delete). Touched buckets only; batch_id = the triggering epoch
-        so a crash-replayed compaction no-ops.
+        """Fold the pending deltas into the bucketed base: each key's
+        rows from its newest delta win (`_latest`; a later D after an
+        earlier I reduces to the delete). Touched buckets only;
+        batch_id = the triggering epoch so a crash-replayed compaction
+        no-ops.
 
         Probe-key bucketing (bucket_cols != key_cols) needs one more
         rule: a bucket-moving re-send encodes as tombstone(old bucket) +
         insert(new bucket) for the SAME key. The latest-image reduction
-        alone would drop that tombstone, the merge would never touch the
-        old bucket, and the stale pre-epoch image would survive
-        compaction as a duplicate key. So besides the latest image per
-        key (insert beats a same-epoch tombstone — the insert is the
-        final state), the reduction CARRIES every window tombstone per
+        alone keeps only the newest such pair, the merge would never
+        touch an older bucket, and the stale pre-epoch image would
+        survive compaction as a duplicate key. So besides the newest
+        delta's rows per key (the merge lets a same-epoch insert beat
+        the tombstone), the reduction CARRIES every window tombstone per
         (key, bucket) so the merge rewrites every bucket the key ever
         occupied; a tombstone for a key the merge also re-inserts is a
         no-op there (the matched-new branch wins), never a lost row.
@@ -226,41 +227,25 @@ class DiffStateTable:
         append-only streaming indexes — the merge path rewrites every
         bucket a uniform window touches, i.e. the WHOLE accumulated
         state, every compact_every epochs."""
-        if (self.append_fresh_compaction and self._pending
-                and all(self._fresh.get(e, False) for e in self._pending)):
-            rows = (
-                self._stacked_deltas(self._pending)
-                .drop("__e")
-                .filter(~F.col("__del")).drop("__del")
-            )
-            self.tx.append_fresh(rows, batch_id=epoch, app_id=app_id)
-            for e in self._compacted_prev:
-                shutil.rmtree(self._delta_dir(e), ignore_errors=True)
-            self._compacted_prev = list(self._pending)
-            self._pending = []
-            self._fresh = {}
-            return
         stacked = self._stacked_deltas(self._pending)
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.desc("__e"), F.asc("__del"))
-        latest = (
-            stacked.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__e")
-        )
-        if self.bucket_cols != self.key_cols:
-            tombs = (
-                stacked.filter(F.col("__del")).drop("__e")
-                .dropDuplicates(self.key_cols + self.bucket_cols)
-            )
-            reduced = latest.unionByName(tombs).dropDuplicates(
-                self.key_cols + self.bucket_cols + ["__del"])
+        if all(self._fresh.get(e, False) for e in self._pending):
+            self.tx.append_fresh(
+                stacked.filter(~F.col("__del")).drop("__del", "__e"),
+                batch_id=epoch, app_id=app_id)
         else:
-            # key-bucketed state: a tombstone can only live in the
-            # key's own bucket, which the latest image already touches
-            reduced = latest
-        self.tx.merge(reduced, delete_col="__del", batch_id=epoch,
-                      app_id=app_id)
+            reduced = self._latest(stacked).drop("__e")
+            # key-bucketed state needs no tombstone carry: a tombstone
+            # can only live in the key's own bucket, which the newest
+            # delta's rows already touch
+            if self.bucket_cols != self.key_cols:
+                tombs = (
+                    stacked.filter(F.col("__del")).drop("__e")
+                    .dropDuplicates(self.key_cols + self.bucket_cols)
+                )
+                reduced = reduced.unionByName(tombs).dropDuplicates(
+                    self.key_cols + self.bucket_cols + ["__del"])
+            self.tx.merge(reduced, delete_col="__del", batch_id=epoch,
+                          app_id=app_id)
         # previous window's dirs leave retention only NOW — one full
         # cycle after they were compacted (lazy readers; see module doc)
         for e in self._compacted_prev:
@@ -271,8 +256,10 @@ class DiffStateTable:
 
     # -- read path -----------------------------------------------------------
 
-    def _stacked_deltas(self, epochs: list[int]) -> DataFrame:
-        """All pending delta rows with their epoch stamp `__e`."""
+    def _stacked_deltas(self, epochs: list[int],
+                        bucket_ids: list[int] | None = None) -> DataFrame:
+        """All rows of the given deltas with their epoch stamp `__e`;
+        with bucket_ids, only the rows that hash into those buckets."""
         schema = self._delta_schema()
         out = None
         for e in epochs:
@@ -280,29 +267,39 @@ class DiffStateTable:
                 self._delta_dir(e)
             ).withColumn("__e", F.lit(e))
             out = d if out is None else out.unionByName(d)
+        if bucket_ids is not None:
+            out = out.filter(self.tx._bucket_col().isin(*bucket_ids)
+                             if bucket_ids else F.lit(False))
         return out
 
-    def _apply_deltas(self, base: DataFrame | None,
-                      epochs: list[int]) -> DataFrame | None:
-        """base ⊕ deltas, in epoch order: each delta's digests replace
-        the base's rows; `__del` rows drop out. Fresh-keys deltas (see
-        advance) union directly — no anti-join, no shuffle."""
+    def _latest(self, stacked: DataFrame) -> DataFrame:
+        """Each key's rows from the newest delta that names it. ALL of
+        that delta's rows, not one: a bucket move writes a tombstone and
+        an insert for the same key in one delta."""
+        w = Window.partitionBy(*self.key_cols)
+        return (stacked.withColumn("__m", F.max("__e").over(w))
+                .filter(F.col("__e") == F.col("__m")).drop("__m"))
+
+    def _live(self, base: DataFrame | None, epochs: list[int],
+              bucket_ids: list[int] | None = None) -> DataFrame | None:
+        """base ⊕ deltas in one pass: the deltas are stacked once and
+        reduced by `_latest`; the base is anti-joined once against every
+        key the non-fresh deltas name; `__del` rows drop out. Fresh-keys
+        deltas (see advance) name no key of the base or of an earlier
+        delta, so with one delta, or only fresh ones, there is nothing
+        to reduce: no window, no anti-join, no shuffle."""
         if not epochs:
             return base
-        for e in epochs:
-            d = self.spark.read.schema(self._delta_schema()).parquet(
-                self._delta_dir(e)
-            )
-            upserts = d.filter(~F.col("__del")).drop("__del")
-            if base is None:
-                base = upserts
-            elif self._fresh.get(e, False):
-                base = base.unionByName(upserts)
-            else:
-                base = base.join(
-                    d.select(*self.key_cols), self.key_cols, "left_anti"
-                ).unionByName(upserts)
-        return base
+        stacked = self._stacked_deltas(epochs, bucket_ids)
+        plain = [e for e in epochs if not self._fresh.get(e, False)]
+        if plain and base is not None:
+            base = base.join(
+                stacked.filter(F.col("__e").isin(*plain))
+                .select(*self.key_cols), self.key_cols, "left_anti")
+        if plain and len(epochs) > 1:
+            stacked = self._latest(stacked)
+        live = stacked.filter(~F.col("__del")).drop("__del", "__e")
+        return live if base is None else base.unionByName(live)
 
     def _strip(self, df: DataFrame) -> DataFrame:
         # synthetic digest keys are internal: operators recompute them
@@ -312,7 +309,7 @@ class DiffStateTable:
     def read_live(self) -> DataFrame:
         """Current payload rows (base at head + all pending deltas)."""
         base = self.tx.read() if self.tx.version > 0 else None
-        out = self._apply_deltas(base, self._pending)
+        out = self._live(base, self._pending)
         if out is None:
             raise ValueError("no state advanced yet")
         return self._strip(out)
@@ -339,31 +336,13 @@ class DiffStateTable:
         """read_live restricted to the given buckets: the base's
         matching bucket dirs plus the pending deltas filtered by the
         same bucket hash. Because bucket_cols are functionally
-        determined by key_cols (the constructor contract), restricting
-        BOTH sides of the per-delta anti-join to the same bucket set
-        yields exactly read_live().where(bucket in bucket_ids) — every
-        possible equality match on the bucket columns is present."""
+        determined by key_cols (the constructor contract), a key's rows
+        all live in one bucket, so restricting the base, the latest-delta
+        window and the anti-join to the same bucket set yields exactly
+        read_live().where(bucket in bucket_ids)."""
         base = (self.tx.read_buckets(bucket_ids)
                 if self.tx.version > 0 else None)
-        if not self._pending:
-            out = base
-        else:
-            ids = set(bucket_ids)
-            out = base
-            for e in self._pending:
-                d = self.spark.read.schema(self._delta_schema()).parquet(
-                    self._delta_dir(e)
-                ).filter(self.tx._bucket_col().isin(*ids) if ids
-                         else F.lit(False))
-                upserts = d.filter(~F.col("__del")).drop("__del")
-                if out is None:
-                    out = upserts
-                elif self._fresh.get(e, False):
-                    out = out.unionByName(upserts)
-                else:
-                    out = out.join(
-                        d.select(*self.key_cols), self.key_cols, "left_anti"
-                    ).unionByName(upserts)
+        out = self._live(base, self._pending, bucket_ids)
         if out is None:
             raise ValueError("no state advanced yet")
         return self._strip(out)
@@ -388,9 +367,9 @@ class DiffStateTable:
             # HEAD — which already CONTAINS the compacted pending
             # epochs' rows — so a fresh-keys union would duplicate every
             # row of those epochs (double dedup pairs, doubled BM25
-            # tf/df). Drop the flags: the per-delta anti-join
-            # re-application is idempotent over the ahead base (each
-            # key's rows are replaced by the same latest image).
+            # tf/df). Drop the flags: the base anti-join + latest-delta
+            # union is idempotent over the ahead base (each key's rows
+            # are replaced by the same latest image).
             self._fresh = {e: False for e in self._fresh}
         # delta dirs on disk that are NOT in the committed pending list
         # were compacted (or orphaned) before the restart — schedule them
@@ -404,7 +383,7 @@ class DiffStateTable:
         base = (rewind_to_version(self.tx, self.tx.read(), meta["v"],
                                   self.key_cols)
                 if self.tx.version > 0 else None)
-        out = self._apply_deltas(base, self._pending)
+        out = self._live(base, self._pending)
         return None if out is None else self._strip(out)
 
 

@@ -182,31 +182,38 @@ def test_multi_partition_batches_write_one_file_per_bucket(spark, tmp_path):
     assert _rows(a.read()) == sorted(fresh[0] + fresh[1])
 
 
-def _mk(spark, path, append_mode=True, compact_every=2):
-    st = DiffStateTable(spark, path, key_cols=["dg"], internal_key=True,
-                        bucket_cols=["k"], n_buckets=8,
-                        compact_every=compact_every)
-    st.append_fresh_compaction = append_mode
-    return st
+def _mk(spark, path, compact_every=2):
+    return DiffStateTable(spark, path, key_cols=["dg"], internal_key=True,
+                          bucket_cols=["k"], n_buckets=8,
+                          compact_every=compact_every)
 
 
-def _adv_fresh(spark, st, e, n=6):
+def _adv_fresh(spark, st, e, n=6, fresh=True):
     delta = spark.createDataFrame(
         [(f"dg{e}_{i}", f"key{i}", e * 10 + i) for i in range(n)],
         ["dg", "k", "v"]).withColumn("__del", F.lit(False))
-    st.advance(delta, epoch=e, app_id="t", fresh_keys=True)
+    st.advance(delta, epoch=e, app_id="t", fresh_keys=fresh)
 
 
 def test_all_fresh_window_compacts_via_append(spark, tmp_path):
     """Same final state through the append path as through the merge
-    path, across two compaction windows, and the append path actually
-    ran (version advanced without the merge's key-window reduction —
-    witnessed by the base containing the rows and read_live matching)."""
-    a = _mk(spark, str(tmp_path / "a"), append_mode=True)
-    m = _mk(spark, str(tmp_path / "m"), append_mode=False)
+    path, across two compaction windows. The merge reference is a twin
+    state advanced with the same rows WITHOUT the fresh-keys assertion,
+    so it compacts by merge and reads through the latest-delta window
+    and base anti-join."""
+    a = _mk(spark, str(tmp_path / "a"))
+    m = _mk(spark, str(tmp_path / "m"))
+    calls = []
+    for name, st in (("a", a), ("m", m)):
+        for meth in ("append_fresh", "merge"):
+            def spy(*args, _f=getattr(st.tx, meth), _tag=(name, meth), **kw):
+                calls.append(_tag)
+                return _f(*args, **kw)
+            setattr(st.tx, meth, spy)
     for e in range(1, 6):  # compactions fire at epochs 3 and 5
         _adv_fresh(spark, a, e)
-        _adv_fresh(spark, m, e)
+        _adv_fresh(spark, m, e, fresh=False)
+    assert sorted(calls) == [("a", "append_fresh")] * 2 + [("m", "merge")] * 2
     assert a.tx.version == m.tx.version == 2
     assert _rows(a.read_live()) == _rows(m.read_live())
     bids = a.bucket_ids_for_values([["key1"], ["key4"]])

@@ -157,6 +157,11 @@ def test_bm25_serving_avgdl_matches_batch_avg(spark, tmp_path):
     assert sc["n_docs"] == 39
 
 
+def _anti_joins(df) -> int:
+    return df._jdf.queryExecution().analyzed().toString().count(
+        "Join LeftAnti")
+
+
 @pytest.mark.slow
 def test_diffstate_fresh_keys_union_path(spark, tmp_path):
     """fresh_keys deltas read identically to anti-join deltas for an
@@ -187,13 +192,11 @@ def test_diffstate_fresh_keys_union_path(spark, tmp_path):
     bids = sa.bucket_ids_for_values([["key2"], ["key7"]])
     assert _rows(sa.read_live_pruned(bids)) == _rows(
         sb.read_live_pruned(bids))
-    # the union fast path really is anti-join-free for the fresh window
-    # (analyzed plan = construction shape; the optimizer may later
-    # distribute the one remaining anti-join through the union)
-    plan = sa.read_live()._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Join LeftAnti") == 1  # only the delete epoch
-    plain = sb.read_live()._jdf.queryExecution().analyzed().toString()
-    assert plain.count("Join LeftAnti") == 2  # every non-first epoch
+    # with no compacted base there is nothing to anti-join: the pending
+    # deltas reduce in one latest-delta pass (analyzed plan =
+    # construction shape)
+    assert _anti_joins(sa.read_live()) == 0
+    assert _anti_joins(sb.read_live()) == 0
 
     # resume: flags restored from the committed meta
     store = StateStore(spark, str(tmp_path / "store"))
@@ -203,6 +206,44 @@ def test_diffstate_fresh_keys_union_path(spark, tmp_path):
     sc.read_committed(store.load_meta("m"))
     assert sc._fresh == {1: True, 2: True, 3: False}
     assert _rows(sc.read_live()) == _rows(sa.read_live())
+
+
+def test_diffstate_compacted_base_is_anti_joined_once(spark, tmp_path):
+    """Over a compacted base, a read of 3 plain pending deltas (an
+    overwrite, a delete, a re-insert of a deleted key and a bucket move
+    among them) anti-joins the base exactly once — not once per delta —
+    and each key keeps the rows of the newest delta that names it."""
+    def rows(spec):
+        return spark.createDataFrame(
+            spec, ["dg", "k", "v", "__del"])
+
+    st = _mk_state(spark, str(tmp_path / "cb"), compact_every=3)
+    want = {}
+    for e in (1, 2, 3):
+        batch = [(f"dg{e}_{i}", f"key{i}", e * 10 + i, False)
+                 for i in range(4)]
+        st.advance(rows(batch), epoch=e, app_id="t")
+        want.update({d: (k, v) for d, k, v, _ in batch})
+    pending = {
+        4: [("dg1_0", "key0", 400, False), ("dg4_0", "key9", 40, False)],
+        5: [("dg2_1", "key1", 0, True), ("dg1_0", "key0", 500, False)],
+        6: [("dg2_1", "key1", 600, False), ("dg3_2", "key2", 0, True),
+            ("dg4_0", "key9", 40, True), ("dg4_0", "key3", 60, False)],
+    }
+    for e, batch in pending.items():  # epoch 4 compacts epochs 1-3
+        st.advance(rows(batch), epoch=e, app_id="t")
+        for d, k, v, dead in batch:
+            if dead:
+                want.pop(d, None)
+            else:
+                want[d] = (k, v)
+    assert st.tx.version == 1 and st._pending == [4, 5, 6]
+    live = st.read_live()
+    assert _anti_joins(live) == 1
+    assert _rows(live) == sorted(want.values())
+    bids = st.bucket_ids_for_values([["key0"], ["key1"], ["key3"]])
+    assert _rows(st.read_live_pruned(bids)) == sorted(
+        (k, v) for k, v in want.values() if st.tx._bucket_of([k]) in bids)
 
 
 def test_pruned_read_touches_only_matched_bucket_files(spark, tmp_path):
@@ -234,7 +275,7 @@ def test_diffstate_bucket_move_survives_compaction(spark, tmp_path):
     (old bucket) + insert (new bucket) for the SAME key in one delta —
     must not leave the stale image in the old bucket once the delta
     COMPACTS into the base (pre-compaction reads were already correct
-    via the per-delta anti-join)."""
+    via the read's latest-delta rule)."""
     st = _mk_state(spark, str(tmp_path / "mv"), compact_every=1)
 
     def adv(e, rows_, fresh=False):

@@ -216,6 +216,42 @@ def test_reader_memo_invalidates_on_rewrite(spark, tmp_path):
     assert df2.count() == 9, "reader memo served a stale frame"
 
 
+def test_reader_memo_is_per_session(spark, tmp_path):
+    """newSession() shares its parent's application id but not its temp
+    views: the memo must hand each session its own frame, so a view
+    registered from it lands in the session that asked."""
+    from dozer_spark.registry import load_parquet
+
+    p = str(tmp_path / "s.parquet")
+    spark.range(3).toDF("x").write.mode("overwrite").parquet(p)
+    other = spark.newSession()
+    df1 = load_parquet(spark, p)
+    df2 = load_parquet(other, p)
+    assert df2 is not df1 and df2.sparkSession is other
+    assert load_parquet(other, p) is df2  # still a memo hit per session
+    df2.createOrReplaceTempView("reader_memo_t")
+    try:
+        assert other.catalog.tableExists("reader_memo_t")
+        assert not spark.catalog.tableExists("reader_memo_t")
+    finally:
+        other.catalog.dropTempView("reader_memo_t")
+
+
+def test_reader_memo_rewrite_replaces_entry(spark, tmp_path):
+    """A rewritten table's new signature replaces the path's memo entry
+    instead of adding one per version."""
+    import time
+
+    from dozer_spark.registry import _READER_CACHE, load_parquet
+
+    p = str(tmp_path / "r.parquet")
+    for n in (2, 4, 6):
+        spark.range(n).toDF("x").write.mode("overwrite").parquet(p)
+        assert load_parquet(spark, p).count() == n
+        time.sleep(0.01)
+    assert [k for k in _READER_CACHE if k[1] == p] == [(spark, p)]
+
+
 def test_path_sig_fails_on_unlistable_subdir(tmp_path, monkeypatch):
     """A subdirectory the walk cannot list makes the signature None
     (uncacheable), never a signature of the partial listing."""
