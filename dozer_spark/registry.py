@@ -40,16 +40,18 @@ TESTDATA_PKS: dict[str, list[str]] = {
 # math would lose precision on ~1.7e18 ns epochs).
 
 
-# Parquet METADATA cache: (path, mtime_ns, size) -> (spark schema, ns cols).
+# Parquet METADATA cache: path -> (sig, spark schema, ns cols).
 # Schema inference (`spark.read.parquet`) is a ~90 ms driver round-trip per
 # table per call; with every query build re-opening its input tables, the
 # inference dominated the driver-side build cost (measured 1.13 s of a
 # 1.15 s catalog load at sf0.1 — guide §7.3: planning/metadata is
-# single-threaded driver work). The cache holds only file METADATA keyed
-# by (path, mtime, size) — a rewritten file misses and re-infers — so
-# every query still computes from the parquet bytes; this is the same
-# class of caching as Spark's own session file-listing cache (guide §6).
-_SCHEMA_CACHE: dict[tuple, tuple] = {}
+# single-threaded driver work). The cache holds only file METADATA, one
+# entry per path checked against its (mtime, size) signature — a
+# rewritten file re-infers and REPLACES the entry, so a table rewritten
+# N times holds one schema, not N — and every query still computes from
+# the parquet bytes; this is the same class of caching as Spark's own
+# session file-listing cache (guide §6).
+_SCHEMA_CACHE: dict[str, tuple] = {}
 # (session, path) -> (sig, DataFrame, ns_cols): the fully-built reader
 # frame. METADATA ONLY — a DataFrame is an immutable logical plan, never
 # data or results; every action over it still scans the parquet. Keyed
@@ -243,10 +245,11 @@ class Catalog:
 def load_parquet(spark: SparkSession, path: str, name: str | None = None) -> DataFrame:
     """Read a parquet table, normalizing ns timestamps to timestamp_ntz.
 
-    Schema + ns-column metadata is memoized per (path, mtime, size):
-    a cache hit skips the footer probe and Spark's schema inference
-    (`spark.read.schema(...)` instead of `spark.read.parquet`'s
-    inference pass — ~3x less driver time per open)."""
+    Schema + ns-column metadata is memoized per path and replaced when
+    the path's (mtime, size) signature changes: a cache hit skips the
+    footer probe and Spark's schema inference (`spark.read.schema(...)`
+    instead of `spark.read.parquet`'s inference pass — ~3x less driver
+    time per open)."""
     sig = _path_sig(path)
     rkey = (spark, path)
     memo = _READER_CACHE.get(rkey)
@@ -256,21 +259,20 @@ def load_parquet(spark: SparkSession, path: str, name: str | None = None) -> Dat
             # the legacy conf must hold at SCAN time on every build
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return df
-    hit = _SCHEMA_CACHE.get(sig) if sig is not None else None
-    if hit is None:
-        ns_cols = tuple(_nanos_ts_cols(path))
-        if ns_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    hit = _SCHEMA_CACHE.get(path)
+    if sig is not None and hit is not None and hit[0] == sig:
+        _, schema, ns_cols = hit
+    else:
+        schema, ns_cols = None, tuple(_nanos_ts_cols(path))
+    if ns_cols:
+        # the legacy conf must hold at SCAN time for TIMESTAMP(NANOS)
+        # columns even with an explicit schema (the reader validates
+        # catalyst type vs parquet type per file)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if schema is None:
         schema = spark.read.parquet(path).schema
         if sig is not None:
-            _SCHEMA_CACHE[sig] = (schema, ns_cols)
-    else:
-        schema, ns_cols = hit
-        if ns_cols:
-            # the legacy conf must hold at SCAN time for TIMESTAMP(NANOS)
-            # columns even with an explicit schema (the reader validates
-            # catalyst type vs parquet type per file)
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            _SCHEMA_CACHE[path] = (sig, schema, ns_cols)
     # ALWAYS build the returned frame through the explicit-schema path —
     # also right after inferring. A frame read with an inferred schema is
     # a DIFFERENT logical relation than one read with an explicit schema,

@@ -17,17 +17,16 @@ work must be O(batch), not O(state).
 `DiffStateTable` is the classic delta-log split:
 
 - **per epoch**: the changed rows (the batch's per-PK images / the
-  I/U/D diff the operator already computed) are appended as ONE small
-  parquet delta — a single write job, O(changed) bytes;
+  I/U/D diff the operator already computed) are written as ONE small
+  parquet delta dir `deltas/__e=<epoch>` — one write job, O(changed);
 - **every `compact_every` epochs**: the pending deltas are reduced
   (each key's newest delta wins) and MERGEd into the bucketed base
   table — two jobs, touched buckets only, amortized across the window;
-- **reads** reconstruct the live state as base ⊕ pending deltas in one
-  pass: the pending deltas are stacked once, each key keeps the rows of
-  the newest delta that names it, and the base is anti-joined once
-  against every pending key — so a read costs the same Spark work at
-  every pending count. Compaction reduces with the same latest-delta
-  rule (`_latest`).
+- **reads** reconstruct base ⊕ pending deltas in one pass: ONE scan of
+  the pending `__e=` dirs (the same plan and compiled code every epoch),
+  each key keeping the newest delta's rows, one base anti-join against
+  every pending key — the same Spark work at every pending count.
+  Compaction reduces with the same latest-delta rule (`_latest`).
 
 Crash contract (the reference's epoch-commit semantics, dozer-core
 checkpoint.rs): the StateStore manifest commit is the epoch boundary;
@@ -53,6 +52,7 @@ changelogs holding the previous epoch's read plan stay valid.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -128,16 +128,16 @@ class DiffStateTable:
                             else list(key_cols))
         self.internal_key = internal_key
         self.compact_every = compact_every
-        if os.path.exists(os.path.join(path, "MANIFEST.json")):
-            # a TransactionalTable manifest at the ROOT is the pre-delta-
-            # log layout; reading base/ (empty) while the operator's
-            # other state restores would silently corrupt aggregates —
-            # fail loudly instead
+        if (os.path.exists(os.path.join(path, "MANIFEST.json"))
+                or glob.glob(os.path.join(glob.escape(path), "deltas", "e*"))):
+            # a ROOT TransactionalTable manifest (pre-delta-log) or
+            # `deltas/e000123` dirs (before `__e=`): a resume would read
+            # an empty base / none of those deltas and silently corrupt
+            # aggregates — fail loudly instead
             raise ValueError(
-                f"{path} holds a pre-delta-log TransactionalTable state "
-                "layout; delete the state dir (the pipeline re-backfills) "
-                "or migrate it before resuming"
-            )
+                f"{path} holds an older state layout (a pre-delta-log "
+                "manifest or `deltas/e*` dirs); delete the state dir (the "
+                "pipeline re-backfills) or migrate it before resuming")
         self.tx = TransactionalTable(spark, os.path.join(path, "base"),
                                      pk=self.key_cols, n_buckets=n_buckets,
                                      bucket_cols=self.bucket_cols)
@@ -155,7 +155,7 @@ class DiffStateTable:
     # -- paths ---------------------------------------------------------------
 
     def _delta_dir(self, epoch: int) -> str:
-        return os.path.join(self.path, "deltas", f"e{epoch:06d}")
+        return os.path.join(self.path, "deltas", f"__e={epoch}")
 
     def _delta_schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self._schema_json))
@@ -258,15 +258,13 @@ class DiffStateTable:
 
     def _stacked_deltas(self, epochs: list[int],
                         bucket_ids: list[int] | None = None) -> DataFrame:
-        """All rows of the given deltas with their epoch stamp `__e`;
-        with bucket_ids, only the rows that hash into those buckets."""
-        schema = self._delta_schema()
-        out = None
-        for e in epochs:
-            d = self.spark.read.schema(schema).parquet(
-                self._delta_dir(e)
-            ).withColumn("__e", F.lit(e))
-            out = d if out is None else out.unionByName(d)
+        """All rows of the given deltas: ONE scan of just their dirs, the
+        epoch `__e` from partition discovery (no per-epoch literal); with
+        bucket_ids, only the rows that hash into those buckets."""
+        out = (self.spark.read
+               .schema(self._delta_schema().add("__e", T.LongType()))
+               .option("basePath", os.path.join(self.path, "deltas"))
+               .parquet(*[self._delta_dir(e) for e in epochs]))
         if bucket_ids is not None:
             out = out.filter(self.tx._bucket_col().isin(*bucket_ids)
                              if bucket_ids else F.lit(False))
@@ -293,9 +291,10 @@ class DiffStateTable:
         stacked = self._stacked_deltas(epochs, bucket_ids)
         plain = [e for e in epochs if not self._fresh.get(e, False)]
         if plain and base is not None:
-            base = base.join(
-                stacked.filter(F.col("__e").isin(*plain))
-                .select(*self.key_cols), self.key_cols, "left_anti")
+            keys = (stacked if len(plain) == len(epochs)
+                    else stacked.filter(F.col("__e").isin(*plain)))
+            base = base.join(keys.select(*self.key_cols), self.key_cols,
+                             "left_anti")
         if plain and len(epochs) > 1:
             stacked = self._latest(stacked)
         live = stacked.filter(~F.col("__del")).drop("__del", "__e")
@@ -374,12 +373,10 @@ class DiffStateTable:
         # delta dirs on disk that are NOT in the committed pending list
         # were compacted (or orphaned) before the restart — schedule them
         # for removal at the NEXT compaction, else they leak forever
-        dd = os.path.join(self.path, "deltas")
-        if os.path.isdir(dd):
-            on_disk = [int(v[1:]) for v in os.listdir(dd)
-                       if v.startswith("e")]
-            self._compacted_prev = [e for e in on_disk
-                                    if e not in self._pending]
+        dd = os.path.join(glob.escape(self.path), "deltas")
+        on_disk = [int(d.rsplit("=", 1)[1])
+                   for d in glob.glob(os.path.join(dd, "__e=*"))]
+        self._compacted_prev = [e for e in on_disk if e not in self._pending]
         base = (rewind_to_version(self.tx, self.tx.read(), meta["v"],
                                   self.key_cols)
                 if self.tx.version > 0 else None)

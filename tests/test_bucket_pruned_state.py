@@ -8,7 +8,8 @@ buckets) instead of O(state). Pins:
 - read_live_pruned == read_live restricted to the pruned buckets, both
   before and after compaction, with deletes in flight;
 - layout guards fail loudly (bucket mismatch on resume, point lookup
-  on a probe-bucketed table);
+  on a probe-bucketed table, the unpartitioned delta layout);
+- the pending deltas are read as one scan;
 - the BM25 serving scalars produce the exact batch avgdl.
 """
 
@@ -244,6 +245,33 @@ def test_diffstate_compacted_base_is_anti_joined_once(spark, tmp_path):
     bids = st.bucket_ids_for_values([["key0"], ["key1"], ["key3"]])
     assert _rows(st.read_live_pruned(bids)) == sorted(
         (k, v) for k, v in want.values() if st.tx._bucket_of([k]) in bids)
+
+
+def test_diffstate_pending_deltas_are_one_scan(spark, tmp_path):
+    """The pending deltas are read as ONE parquet scan of their
+    `deltas/__e=<epoch>` dirs: no union of per-delta scans, and no
+    per-epoch literal in the plan (a plan and generated code that differ
+    every epoch would be recompiled every epoch)."""
+    st = _mk_state(spark, str(tmp_path / "one"), compact_every=10)
+    for e in (1, 2, 3):
+        st.advance(spark.createDataFrame(
+            [(f"dg{e}_{i}", f"key{i}", e, False) for i in range(4)],
+            ["dg", "k", "v", "__del"]), epoch=e, app_id="t")
+    live = st.read_live()
+    plan = live._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan, plan
+    assert plan.count("Relation [") == 1, plan
+    assert len(_rows(live)) == 12
+
+
+def test_diffstate_refuses_unpartitioned_delta_layout(spark, tmp_path):
+    """A state dir holding `deltas/e000001`-style delta dirs (the layout
+    before the `__e=` partitioned one) fails loudly at construction:
+    a resume would never list those epochs and silently lose them."""
+    p = tmp_path / "old"
+    (p / "deltas" / "e000001").mkdir(parents=True)
+    with pytest.raises(ValueError, match="deltas/e"):
+        _mk_state(spark, str(p))
 
 
 def test_pruned_read_touches_only_matched_bucket_files(spark, tmp_path):

@@ -252,6 +252,23 @@ def test_reader_memo_rewrite_replaces_entry(spark, tmp_path):
     assert [k for k in _READER_CACHE if k[1] == p] == [(spark, p)]
 
 
+def test_schema_memo_rewrite_replaces_entry(spark, tmp_path):
+    """The schema memo holds one entry per path: each rewrite's new
+    signature replaces it, and the entry carries the new schema."""
+    import time
+
+    from dozer_spark.registry import _SCHEMA_CACHE, load_parquet
+
+    p = str(tmp_path / "s.parquet")
+    for n in range(1, 5):
+        spark.range(n).selectExpr(*[f"id AS c{i}" for i in range(n)]) \
+            .write.mode("overwrite").parquet(p)
+        assert load_parquet(spark, p).columns == [f"c{i}" for i in range(n)]
+        time.sleep(0.01)
+    assert [k for k in _SCHEMA_CACHE if p in k] == [p]
+    assert _SCHEMA_CACHE[p][1].fieldNames() == ["c0", "c1", "c2", "c3"]
+
+
 def test_path_sig_fails_on_unlistable_subdir(tmp_path, monkeypatch):
     """A subdirectory the walk cannot list makes the signature None
     (uncacheable), never a signature of the partial listing."""

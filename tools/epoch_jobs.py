@@ -1,11 +1,11 @@
-"""Spark jobs of one steady CDC epoch, grouped by the Python call site
-that launched them.
+"""Spark jobs and compiled classes of one steady CDC epoch, grouped by
+the Python call site that launched them.
 
 Runs the benchmark's `cdc_join_agg` pipeline (wal2json source -> durable
 RetractingJoin -> durable RetractingAggregation -> TransactionalTable
 merge sink, `perfbench/cdc.py`) for the backfill epoch and N steady
-epochs, then prints the N-th steady epoch's jobs per call site, busiest
-first:
+epochs, then prints the N-th steady epoch's jobs, tasks and compiled
+codegen classes per call site, busiest first:
 
     python tools/epoch_jobs.py [--seed 21] [--changes 500] [--cores 4] [--epoch 1]
 
@@ -20,8 +20,13 @@ steady epoch a profile hook puts each call site in its own Spark job
 group (the `spark.jobGroup.id` local property, changed only when the
 site changes), and the status tracker then lists every group's jobs.
 Spark inherits the property into the threads that run broadcasts and AQE
-query stages, so every job of the epoch lands in exactly one group. The
-hook only tags jobs; it changes no plan.
+query stages, so every job of the epoch lands in exactly one group. At
+each site change the hook also reads Spark's count of compiled codegen
+classes (`CodegenMetrics`, one per Janino compile; a class served from
+the codegen cache is not counted) and credits the classes compiled
+since the previous change to the previous site, so a steady epoch's
+codegen layer shows which call still compiles. The hook only tags jobs
+and reads a counter; it changes no plan.
 """
 
 from __future__ import annotations
@@ -52,6 +57,19 @@ class CallSiteGroups:
         self._busy = False
         self._last = None
         self.sites: list[str] = []
+        self._compiles = (sc._jvm.org.apache.spark.metrics.source
+                          .CodegenMetrics.METRIC_COMPILATION_TIME())
+        self._compiled = self._compiles.getCount()
+        self.classes: dict[str, int] = {}
+
+    def charge(self) -> None:
+        """Credit the classes compiled since the last site change to the
+        last site (call once more after the hook is removed)."""
+        n = self._compiles.getCount()
+        if self._last is not None:
+            self.classes[self._last] = (self.classes.get(self._last, 0)
+                                        + n - self._compiled)
+        self._compiled = n
 
     @staticmethod
     def _site(frame) -> str:
@@ -75,8 +93,9 @@ class CallSiteGroups:
         site = self._site(frame.f_back)
         if site == self._last:
             return
-        self._busy = True  # the property call below is a py4j call too
+        self._busy = True  # the calls below are py4j calls too
         try:
+            self.charge()
             self._jsc.setLocalProperty("spark.jobGroup.id", _GROUP + site)
         finally:
             self._busy = False
@@ -85,14 +104,16 @@ class CallSiteGroups:
             self.sites.append(site)
 
 
-def census(sc, sites: list[str]) -> list[tuple[int, int, str]]:
-    """(jobs, tasks, site) per call site that launched any job."""
+def census(sc, sites: list[str],
+           classes: dict[str, int]) -> list[tuple[int, int, int, str]]:
+    """(jobs, tasks, compiled classes, site) per call site that launched
+    any job or compiled any class."""
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
     tracker = sc.statusTracker()
     rows = []
     for site in sites:
         jobs = tracker.getJobIdsForGroup(_GROUP + site)
-        if not jobs:
+        if not jobs and not classes.get(site):
             continue
         tasks = 0
         for job_id in jobs:
@@ -101,8 +122,8 @@ def census(sc, sites: list[str]) -> list[tuple[int, int, str]]:
                 st = tracker.getStageInfo(stage_id)
                 if st is not None:
                     tasks += st.numCompletedTasks
-        rows.append((len(jobs), tasks, site))
-    return sorted(rows, key=lambda r: (-r[0], r[2]))
+        rows.append((len(jobs), tasks, classes.get(site, 0), site))
+    return sorted(rows, key=lambda r: (-r[0], -r[2], r[3]))
 
 
 def main(argv=None) -> int:
@@ -152,15 +173,17 @@ def main(argv=None) -> int:
             pipe.epoch(untraced, paths[-1], args.epoch)
         finally:
             sys.setprofile(None)
+            hook.charge()
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         if pipe.read() != stream.expected_groups():
             print("warning: the sink differs from the expected aggregate",
                   file=sys.stderr)
-        rows = census(spark.sparkContext, hook.sites)
-        print(f"{'jobs':>5} {'tasks':>6}  call site")
-        for jobs, tasks, site in rows:
-            print(f"{jobs:>5} {tasks:>6}  {site}")
+        rows = census(spark.sparkContext, hook.sites, hook.classes)
+        print(f"{'jobs':>5} {'tasks':>6} {'classes':>7}  call site")
+        for jobs, tasks, classes, site in rows:
+            print(f"{jobs:>5} {tasks:>6} {classes:>7}  {site}")
         print(f"{sum(r[0] for r in rows):>5} {sum(r[1] for r in rows):>6}"
+              f" {sum(r[2] for r in rows):>7}"
               f"  total (steady epoch {args.epoch})")
     finally:
         spark.stop()
