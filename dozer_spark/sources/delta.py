@@ -71,7 +71,7 @@ def delta_cdf_changelog(spark: SparkSession, path: str,
 def delta_merge_upsert(spark: SparkSession, batch: DataFrame, path: str,
                        pk: list[str], delete_col: str | None = None) -> None:
     """Atomic MERGE INTO a Delta table — the production-grade version of
-    TransactionalTable.merge (same call shape as upsert_parquet)."""
+    TransactionalTable.merge."""
     from delta.tables import DeltaTable
 
     if not DeltaTable.isDeltaTable(spark, path):

@@ -14,10 +14,11 @@ PrimaryKeyLookupRecordWriter does (dozer-core/src/record_store.rs:29-87).
 
 Modules:
   changelog.py  snapshot materialization, changelog-aware filter/project
-  merge.py      foreachBatch MERGE/upsert sinks (parquet-backed)
   windows.py    streaming tumble/hop aggregation with watermarks (=TTL)
   stateful.py   retraction-capable incremental GROUP BY (dirty-group
                 recompute, mirroring aggregation/processor.rs semantics)
+The epoch-committed MERGE sink is storage/txtable.py
+(TransactionalTable.merge, foreach_batch_merge).
 """
 
 from dozer_spark.streaming.changelog import (
@@ -27,7 +28,6 @@ from dozer_spark.streaming.changelog import (
     changelog_filter,
     snapshot_diff,
 )
-from dozer_spark.streaming.merge import upsert_parquet, foreach_batch_upsert
 from dozer_spark.streaming.windows import streaming_tumble_agg, streaming_hop_agg
 from dozer_spark.streaming.stateful import RetractingAggregation
 from dozer_spark.streaming.join import RetractingJoin
@@ -51,8 +51,6 @@ __all__ = [
     "with_op",
     "apply_changelog",
     "changelog_filter",
-    "upsert_parquet",
-    "foreach_batch_upsert",
     "streaming_tumble_agg",
     "streaming_hop_agg",
     "RetractingAggregation",

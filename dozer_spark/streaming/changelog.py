@@ -211,45 +211,14 @@ def snapshot_diff(old: DataFrame, new: DataFrame, pk: list[str], txid: int = 1) 
     """Diff two table snapshots into a changelog (I/U/D) — CDC from
     periodic full dumps, the batch-world entry into the changelog
     operators. Output rows carry the NEW image for I/U and the OLD image
-    for D (Operation::Delete{old} semantics, types/mod.rs:293-298)."""
-    data_cols = [c for c in new.columns]
-    o = old.select(
-        *[F.col(c).alias(f"__o_{c}") for c in data_cols]
-    )
-    cond = None
-    for k in pk:
-        e = F.col(k).eqNullSafe(F.col(f"__o_{k}"))
-        cond = e if cond is None else cond & e
-    j = new.join(o, cond, "full_outer")
-    new_pk_null = F.col(pk[0]).isNull()
-    old_pk_null = F.col(f"__o_{pk[0]}").isNull()
-    non_pk = [c for c in data_cols if c not in pk]
-    if non_pk:
-        differs = None
-        for c in non_pk:
-            d = ~F.col(c).eqNullSafe(F.col(f"__o_{c}"))
-            differs = d if differs is None else differs | d
-    else:
-        differs = F.lit(False)
-    op = (
-        F.when(old_pk_null & ~new_pk_null, F.lit("I"))
-        .when(new_pk_null & ~old_pk_null, F.lit("D"))
-        .when(differs, F.lit("U"))
-        .otherwise(F.lit(None))
-    )
-    image = [
-        F.when(F.col("__op") == "D", F.col(f"__o_{c}")).otherwise(F.col(c)).alias(c)
-        for c in data_cols
-    ]
-    return (
-        j.withColumn("__op", op)
-        .filter(F.col("__op").isNotNull())
-        .select(
-            "__op",
-            F.lit(txid).cast("long").alias("__txid"),
-            F.monotonically_increasing_id().alias("__seq"),
-            *image,
-        )
+    for D (Operation::Delete{old} semantics, types/mod.rs:293-298): the
+    retracting operators' diff_changelog paired on the PK, stamped with
+    `txid` and a per-row `__seq`."""
+    return diff_changelog(new, old, pk, "__k").select(
+        "__op",
+        F.lit(txid).cast("long").alias("__txid"),
+        F.monotonically_increasing_id().alias("__seq"),
+        *new.columns,
     )
 
 

@@ -5,10 +5,11 @@
   bounds how long a key is remembered). This is the streaming face of
   ops/dedup.exact_dedup.
 - For near-dup (MinHash/SimHash) on streams, compute signatures per
-  micro-batch (stateless, ops/dedup.minhash_signatures) and MERGE into a
-  signature store keyed by band (foreachBatch + upsert_parquet); new
-  docs probe the store for collisions. The signature computation is the
-  same code path batch and streaming — only the store differs.
+  micro-batch (stateless, ops/dedup.minhash_signatures) and advance a
+  signature store keyed by band (StreamingMinHashDedup /
+  StreamingSimHashDedup: a DiffStateTable when durable); new docs probe
+  the store for collisions. The signature computation is the same code
+  path batch and streaming — only the store differs.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ def _check_state_geometry(store, key: str, geom: dict, what: str) -> None:
     would silently match nothing and cross-epoch pairs would be LOST,
     with no error. Geometry is persisted in StateStore meta at first
     commit; a mismatch on resume raises, mirroring the
-    incstate.rewind_to_version vacuum guard (fail loud, never fail
+    txtable.inverse_rewind vacuum guard (fail loud, never fail
     silent-wrong)."""
     stored = store.load_meta(key)
     if stored is not None and stored != geom:

@@ -71,29 +71,12 @@ def rewind_to_version(tx: TransactionalTable, cur: DataFrame,
                       key_cols: list[str]) -> DataFrame | None:
     """State AS OF committed_version (None when <= 0: nothing was
     committed). The inverse-CDF loop itself lives in storage/txtable.py
-    (inverse_rewind), shared with the public time-travel read.
-
-    Same vacuumed-feed guard as read_as_of: TransactionalTable.
-    read_changes silently SKIPS missing version dirs, so a rewind over
-    a vacuumed window would reconstruct a state that never existed.
-    DiffStateTable never sets change_retention, so this never fires
-    there — the check makes the invariant enforced, not incidental."""
+    (inverse_rewind), shared with the public time-travel read, and so
+    does its vacuumed-feed guard. DiffStateTable never sets
+    change_retention, so the guard never fires there — it makes the
+    invariant enforced, not incidental."""
     if committed_version <= 0:
         return None
-    cd = os.path.join(tx.path, "changes")
-    have = (
-        {int(v[1:]) for v in os.listdir(cd) if v.startswith("v")}
-        if os.path.isdir(cd) else set()
-    )
-    missing = sorted(
-        set(range(committed_version + 1, tx.version + 1)) - have
-    )
-    if missing:
-        raise ValueError(
-            f"cannot rewind to v{committed_version}: change feed for "
-            f"versions {missing} was vacuumed — resume would "
-            "reconstruct a state that never existed"
-        )
     return inverse_rewind(tx, cur, committed_version, key_cols)
 
 

@@ -1,50 +1,36 @@
-"""Durable operator state for the changelog operators.
+"""Durable operator state: the epoch manifest.
 
 The reference checkpoints every stateful node per epoch and can resume a
 pipeline from the last committed epoch (dozer-core/src/node.rs:61-67,
 checkpoint.rs / checkpoint_ns.rs: state is serialized on commit, restored
-on restart). Round-1 used `localCheckpoint` chains for operator state —
-fast, but blocks live on executors: lose one executor (or restart the
-driver) and the incremental pipeline is unrecoverable.
+on restart). The operator states themselves live in DiffStateTables
+(incstate.py); `StateStore` is the epoch authority that binds them:
 
-`StateStore` is the Spark-first durable equivalent. Since the
-delta-log migration (incstate.py) the OPERATOR states themselves live
-in DiffStateTables; what remains here is the epoch authority — the
-atomic manifest commit that publishes each epoch's log positions
-(stage_meta) — plus the generic versioned-parquet staging (stage/load)
-for ad-hoc states:
-
-- each named state (input snapshot, aggregate table, join sides, emitted
-  output) is written as parquet under `<root>/<name>/v{epoch}`;
-- a batch's states are STAGED during process_batch and made visible by a
-  single atomic manifest replace (`os.replace` of MANIFEST.json) at
-  commit — the exact epoch-commit contract of the reference: a crash
-  mid-batch leaves the manifest at the previous epoch and the batch
-  replays cleanly;
-- `load()` after a restart reads the committed versions, so a NEW
+- during process_batch an operator STAGES small JSON meta entries
+  (`stage_meta`) — its DiffStateTable log positions, index geometry,
+  scalar counters;
+- `commit` publishes every staged entry as epoch+1 with a single atomic
+  manifest replace (`os.replace` of MANIFEST.json) — the exact
+  epoch-commit contract of the reference: a crash mid-batch leaves the
+  manifest at the previous epoch and the batch replays cleanly;
+- `load_meta` after a restart reads the committed entries, so a NEW
   operator instance (new driver, new session) resumes where the old one
-  stopped;
-- reading the staged parquet back also breaks lineage (what
-  localCheckpoint was doing), so plans stay flat across batches.
+  stopped.
 
 On a real cluster `root` lives on the shared filesystem (HDFS/S3 via a
 committer, or swap the manifest for a Delta transaction log); the
 single-writer assumption matches the reference (one process owns a
-pipeline's state). Versioned dirs older than the previous epoch are
-pruned on commit, keeping two epochs for crash rollback.
+pipeline's state).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import SparkSession
 
 MANIFEST = "MANIFEST.json"
-KEEP_EPOCHS = 2
 
 
 class StateStore:
@@ -69,30 +55,9 @@ class StateStore:
         except FileNotFoundError:
             return None
 
-    # -- state io ------------------------------------------------------------
-
-    def _path(self, name: str, version: int) -> str:
-        return os.path.join(self.root, name, f"v{version:06d}")
-
-    def _read(self, path: str, schema_json: str) -> DataFrame:
-        # explicit schema: an empty state writes no parquet footers, and
-        # schema inference would fail on the empty directory
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        return self.spark.read.schema(schema).parquet(path)
-
-    def stage(self, name: str, df: DataFrame) -> DataFrame:
-        """Write `name`'s next version and return the reloaded (lineage-
-        free) DataFrame. Not visible to load() until commit()."""
-        version = self.epoch + 1
-        path = self._path(name, version)
-        df.write.mode("overwrite").parquet(path)
-        entry = {"version": version, "schema": df.schema.json()}
-        self._staged[name] = entry
-        return self._read(path, entry["schema"])
-
     def commit(self) -> int:
-        """Atomically publish every state staged since the last commit as
-        epoch+1. States not staged this epoch keep their prior version."""
+        """Atomically publish every entry staged since the last commit as
+        epoch+1. Entries not staged this epoch keep their prior value."""
         states = dict(self._committed)
         states.update(self._staged)
         new_epoch = self.epoch + 1
@@ -106,43 +71,17 @@ class StateStore:
         self.epoch = new_epoch
         self._committed = states
         self._staged = {}
-        self._prune()
         return new_epoch
 
     def stage_meta(self, name: str, meta: dict) -> None:
-        """Stage a small JSON metadata entry (no parquet) published
-        atomically with the epoch — e.g. the DiffStateTable version bound
-        to this commit (the crash-rewind anchor, see incstate.py)."""
+        """Stage a small JSON metadata entry published atomically with
+        the epoch — e.g. the DiffStateTable version bound to this commit
+        (the crash-rewind anchor, see incstate.py)."""
         self._staged[name] = {"meta": meta}
 
     def load_meta(self, name: str) -> dict | None:
+        """Committed meta entry by name, or None if never committed."""
         entry = self._committed.get(name)
         if entry is None:
             return None
         return entry.get("meta")
-
-    def load(self, name: str) -> DataFrame | None:
-        """Committed state by name, or None if never committed."""
-        entry = self._committed.get(name)
-        if entry is None:
-            return None
-        return self._read(self._path(name, entry["version"]), entry["schema"])
-
-    def _prune(self) -> None:
-        floor = self.epoch - KEEP_EPOCHS + 1
-        for name, entry in self._committed.items():
-            if "version" not in entry:  # metadata entry: nothing on disk
-                continue
-            d = os.path.join(self.root, name)
-            if not os.path.isdir(d):
-                continue
-            for v in os.listdir(d):
-                if not v.startswith("v"):
-                    continue
-                try:
-                    ver = int(v[1:])
-                except ValueError:
-                    continue
-                # never prune the committed version, whatever its age
-                if ver < floor and ver != entry["version"]:
-                    shutil.rmtree(os.path.join(d, v), ignore_errors=True)

@@ -9,7 +9,9 @@ import pyspark.sql.functions as F
 from dozer_spark.ops.similarity import ivf_ann_topk, brute_force_topk
 from dozer_spark.ops.dedup import dedup_clusters
 from dozer_spark.streaming.changelog import old_images
-from dozer_spark.streaming import streaming_hop_agg, foreach_batch_upsert
+from dozer_spark.storage import TransactionalTable
+from dozer_spark.storage.txtable import foreach_batch_merge
+from dozer_spark.streaming import streaming_hop_agg
 
 
 def test_ivf_recall_vs_brute_force(catalog):
@@ -68,13 +70,14 @@ def test_streaming_hop_agg(spark, tmp_path):
     )
     q = (
         agg.writeStream.outputMode("update")
-        .foreachBatch(foreach_batch_upsert(out, ["window_start"]))
+        .foreachBatch(foreach_batch_merge(out, ["window_start"]))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    got = sorted(str(r.window_start) for r in spark.read.parquet(out).collect())
+    snap = TransactionalTable(spark, out, ["window_start"]).read()
+    got = sorted(str(r.window_start) for r in snap.collect())
     # 00:40 falls in hop windows starting 00:00 and 00:30
     assert got == ["2024-01-01 00:00:00", "2024-01-01 00:30:00"]
 

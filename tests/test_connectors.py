@@ -374,16 +374,22 @@ def test_foreach_batch_merge(spark, tmp_path):
     assert _rows(t.read(), "id", "v") == [(1, "a2"), (2, "b")]
 
 
-def test_concurrent_writer_detected(spark, tmp_path):
+@pytest.mark.parametrize("method", ["merge", "append_fresh"])
+def test_concurrent_writer_detected(spark, tmp_path, method):
     from dozer_spark.storage.txtable import ConcurrentWriteError
 
     p = str(tmp_path / "t")
     a = TransactionalTable(spark, p, pk=["id"])
-    a.merge(spark.createDataFrame([(1, "a")], ["id", "v"]))
+    getattr(a, method)(spark.createDataFrame([(1, "a")], ["id", "v"]))
     b = TransactionalTable(spark, p, pk=["id"])
-    a.merge(spark.createDataFrame([(2, "b")], ["id", "v"]))  # a is now v2
+    # a is now v2
+    getattr(a, method)(spark.createDataFrame([(2, "b")], ["id", "v"]))
     with pytest.raises(ConcurrentWriteError, match="another writer"):
-        b.merge(spark.createDataFrame([(3, "c")], ["id", "v"]))
+        getattr(b, method)(spark.createDataFrame([(3, "c")], ["id", "v"]))
+    # the stale writer deleted nothing: the winner's rows read back intact
+    t = TransactionalTable(spark, p, pk=["id"])
+    assert t.version == 2
+    assert _rows(t.read(), "id", "v") == [(1, "a"), (2, "b")]
 
 
 @pytest.mark.skipif(

@@ -47,41 +47,48 @@ def _ragg(spark, state_dir):
 class TestStateStore:
     def test_stage_then_commit_then_load(self, spark, tmp_path):
         st = StateStore(spark, str(tmp_path / "s"))
-        df = spark.createDataFrame([(1, "a")], ["id", "v"])
-        st.stage("t", df)
-        assert st.load("t") is None  # staged ≠ committed
+        st.stage_meta("t", {"v": 1})
+        assert st.load_meta("t") is None  # staged ≠ committed
         assert st.commit() == 1
-        assert [(r.id, r.v) for r in st.load("t").collect()] == [(1, "a")]
+        assert st.load_meta("t") == {"v": 1}
 
     def test_crash_before_commit_rolls_back(self, spark, tmp_path):
         root = str(tmp_path / "s")
         st = StateStore(spark, root)
-        st.stage("t", spark.createDataFrame([(1,)], ["id"]))
+        st.stage_meta("t", {"v": 1})
         st.commit()
         # epoch 2 staged but NOT committed (simulated crash)
-        st.stage("t", spark.createDataFrame([(2,)], ["id"]))
+        st.stage_meta("t", {"v": 2})
         st2 = StateStore(spark, root)  # restart
         assert st2.epoch == 1
-        assert [r.id for r in st2.load("t").collect()] == [1]
+        assert st2.load_meta("t") == {"v": 1}
 
     def test_empty_state_roundtrip(self, spark, tmp_path):
-        st = StateStore(spark, str(tmp_path / "s"))
-        df = spark.createDataFrame([], "id long, v string")
-        st.stage("t", df)
+        root = str(tmp_path / "s")
+        st = StateStore(spark, root)
+        st.stage_meta("none", None)
+        st.stage_meta("empty", {})
         st.commit()
-        got = st.load("t")
-        assert got.count() == 0 and got.columns == ["id", "v"]
+        for s in (st, StateStore(spark, root)):
+            assert s.load_meta("none") is None
+            assert s.load_meta("absent") is None
+            assert s.load_meta("empty") == {}
 
-    def test_prune_keeps_committed_versions(self, spark, tmp_path):
+    def test_restart_reads_committed_meta(self, spark, tmp_path):
         root = str(tmp_path / "s")
         st = StateStore(spark, root)
         for i in range(5):
-            st.stage("t", spark.createDataFrame([(i,)], ["id"]))
+            st.stage_meta("t", {"v": i})
+            if i % 2:
+                st.stage_meta("odd", {"v": i})
             st.commit()
-        versions = sorted(os.listdir(os.path.join(root, "t")))
-        assert f"v{st.epoch:06d}" in versions
-        assert len(versions) <= 2  # KEEP_EPOCHS
-        assert [r.id for r in st.load("t").collect()] == [4]
+        st2 = StateStore(spark, root)  # restart
+        assert st2.epoch == 5
+        assert st2.load_meta("t") == {"v": 4}
+        # an entry not staged in the last epoch keeps its prior value
+        assert st2.load_meta("odd") == {"v": 3}
+        st.stage_meta("t", {"v": 5})  # staged after the restart's read
+        assert StateStore(spark, root).load_meta("t") == {"v": 4}
 
 
 class TestAggregationResume:

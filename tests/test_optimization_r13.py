@@ -28,11 +28,19 @@ def docs(spark):
     d.unpersist()
 
 
-def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
+# 4096 never fragments a bucket of the sf0.001 documents; 2 splits
+# every bucket of 3+ rows into triangle fragments (the hot-bucket regime)
+HOT_CAPS = [4096, 2]
+
+
+@pytest.mark.parametrize("hot_cap", HOT_CAPS)
+def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs,
+                                                              hot_cap):
     """minhash_lsh_pairs (distinct=False + first-matching-band filter +
     |AuB| = |A|+|B|-|AnB|) must equal the r12 form: pair-level DISTINCT
     then an array_union-based verify. Same threshold/geometry as the
-    declared dedup_minhash_lsh query."""
+    declared dedup_minhash_lsh query, at a cap that never fragments a
+    bucket and at one that fragments every bucket of 3+ rows."""
     from dozer_spark.ops.dedup import (
         _blocked_self_join_pairs,
         minhash_band_table,
@@ -43,16 +51,20 @@ def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
     )
 
     threshold = 0.9
-    got = minhash_lsh_pairs(docs, "text", "doc_id", threshold=threshold)
+    got = minhash_lsh_pairs(docs, "text", "doc_id", threshold=threshold,
+                            hot_band_cap=hot_cap)
 
     n_hashes, n_bands = minhash_geometry(threshold, None, None)
     sigs = minhash_signatures(docs, "text", "doc_id", n_hashes).drop("toks")
     bands = minhash_band_table(sigs, "doc_id", n_hashes, n_bands)
+    n_hot = (bands.groupBy("band", "band_key").count()
+             .filter(F.col("count") > hot_cap).count())
+    assert (n_hot > 0) == (hot_cap == 2)  # the regime under test
     cand = _blocked_self_join_pairs(
         bands,
         ["band", "band_key"],
         "doc_id",
-        hot_cap=4096,
+        hot_cap=hot_cap,
         extra_pred=minhash_size_pred(threshold),
     )  # distinct=True default: the r12 shape
     side_a = sigs.select(
@@ -80,9 +92,12 @@ def test_minhash_pairs_first_band_filter_equals_distinct_form(spark, docs):
     assert got.select("id_a", "id_b").distinct().count() == n
 
 
-def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs):
+@pytest.mark.parametrize("hot_cap", HOT_CAPS)
+def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs,
+                                                               hot_cap):
     """simhash_pairs (distinct=False + first-matching-chunk filter) must
-    equal the r12 form (pair-level DISTINCT), row for row."""
+    equal the r12 form (pair-level DISTINCT), row for row, unfragmented
+    and fragmented."""
     from dozer_spark.ops.dedup import (
         _blocked_self_join_pairs,
         simhash,
@@ -91,16 +106,20 @@ def test_simhash_pairs_first_chunk_filter_equals_distinct_form(spark, docs):
     )
 
     max_hamming, n_bits = 3, 60
-    got = simhash_pairs(docs, "text", "doc_id", max_hamming, n_bits)
+    got = simhash_pairs(docs, "text", "doc_id", max_hamming, n_bits,
+                        hot_chunk_cap=hot_cap)
 
     sigs = simhash(docs, "text", "doc_id", n_bits)
     chunks = simhash_chunk_table(sigs, "doc_id", n_bits, max_hamming)
+    n_hot = (chunks.groupBy("chunk", "chunk_val").count()
+             .filter(F.col("count") > hot_cap).count())
+    assert (n_hot > 0) == (hot_cap == 2)  # the regime under test
     ref = (
         _blocked_self_join_pairs(
             chunks,
             ["chunk", "chunk_val"],
             "doc_id",
-            hot_cap=4096,
+            hot_cap=hot_cap,
             carry=(("sig_a", "sig_b", "simhash"),),
         )  # distinct=True default: the r12 shape
         .withColumn(

@@ -6,7 +6,8 @@ import pyspark.sql.functions as F
 
 from dozer_spark.operators.session import sessionize, session_aggregate, streaming_session_agg
 from dozer_spark.streaming.dedup import streaming_exact_dedup
-from dozer_spark.streaming import foreach_batch_upsert
+from dozer_spark.storage import TransactionalTable
+from dozer_spark.storage.txtable import foreach_batch_merge
 
 
 def _events(spark):
@@ -55,13 +56,14 @@ def test_streaming_session_agg(spark, tmp_path):
     )
     q = (
         agg.writeStream.outputMode("complete")
-        .foreachBatch(foreach_batch_upsert(out, ["user_id", "session_start"]))
+        .foreachBatch(foreach_batch_merge(out, ["user_id", "session_start"]))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    got = {(r.user_id, str(r.session_start)): r.n for r in spark.read.parquet(out).collect()}
+    snap = TransactionalTable(spark, out, ["user_id", "session_start"]).read()
+    got = {(r.user_id, str(r.session_start)): r.n for r in snap.collect()}
     # native session_window end = last_event + gap; counts are what we assert
     assert got[(1, "2024-01-01 10:00:00")] == 2
     assert got[(1, "2024-01-01 11:30:00")] == 1
@@ -87,12 +89,13 @@ def test_streaming_exact_dedup(spark, tmp_path):
     deduped = streaming_exact_dedup(stream, ["k"], "ts", watermark="1 hour")
     q = (
         deduped.writeStream.outputMode("append")
-        .foreachBatch(foreach_batch_upsert(out, ["k"]))
+        .foreachBatch(foreach_batch_merge(out, ["k"]))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    got = {r.k for r in spark.read.parquet(out).collect()}
+    snap = TransactionalTable(spark, out, ["k"]).read()
+    got = {r.k for r in snap.collect()}
     assert got == {1, 2}
-    assert spark.read.parquet(out).count() == 2
+    assert snap.count() == 2

@@ -13,11 +13,11 @@ from dozer_spark.streaming import (
     with_op,
     apply_changelog,
     changelog_filter,
-    upsert_parquet,
-    foreach_batch_upsert,
     streaming_tumble_agg,
     RetractingAggregation,
 )
+from dozer_spark.storage import TransactionalTable
+from dozer_spark.storage.txtable import foreach_batch_merge
 
 
 def _cl(spark, rows):
@@ -68,18 +68,52 @@ def test_changelog_filter_update_flip(spark):
     ]
 
 
+def test_snapshot_diff_ops_and_images(spark):
+    """snapshot_diff: unchanged rows emit nothing, a value change is ONE
+    U with the new image (NULL->value and value->NULL on a non-PK
+    column included), a removed key is D with the old image, a new key
+    is I; columns are __op, __txid, __seq, then new's columns."""
+    from dozer_spark.streaming import snapshot_diff
+
+    schema = "id long, name string, amt long"
+    old = spark.createDataFrame(
+        [(1, "a", 10), (2, "b", None), (3, "c", 30), (4, "d", 40),
+         (6, "f", None)], schema)
+    new = spark.createDataFrame(
+        [(1, "a", 10),      # unchanged
+         (2, "b", 20),      # NULL -> value
+         (3, "c", None),    # value -> NULL
+         (4, "d2", 40),     # value change
+         (5, "e", 50)],     # new key; 6 removed
+        schema)
+    out = snapshot_diff(old, new, ["id"], txid=7)
+    assert out.columns == ["__op", "__txid", "__seq", "id", "name", "amt"]
+    got = sorted((r["__op"], r["__txid"], r.id, r.name, r.amt)
+                 for r in out.collect())
+    assert got == [
+        ("D", 7, 6, "f", None),
+        ("I", 7, 5, "e", 50),
+        ("U", 7, 2, "b", 20),
+        ("U", 7, 3, "c", None),
+        ("U", 7, 4, "d2", 40),
+    ]
+    assert out.select("__seq").distinct().count() == 5
+
+
 def test_upsert_parquet_roundtrip(spark, tmp_path):
+    """Upsert by PK into a parquet TransactionalTable, deletes included."""
     path = str(tmp_path / "target")
+    tx = TransactionalTable(spark, path, ["id"])
     b1 = spark.createDataFrame([(1, "x"), (2, "y")], ["id", "v"])
-    upsert_parquet(spark, b1, path, ["id"])
+    tx.merge(b1)
     b2 = spark.createDataFrame([(2, "y2"), (3, "z")], ["id", "v"])
-    upsert_parquet(spark, b2, path, ["id"])
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    tx.merge(b2)
+    got = {r.id: r.v for r in TransactionalTable(spark, path, ["id"]).read().collect()}
     assert got == {1: "x", 2: "y2", 3: "z"}
     # delete handling
     b3 = spark.createDataFrame([(1, "x", True), (4, "w", False)], ["id", "v", "is_del"])
-    upsert_parquet(spark, b3, path, ["id"], delete_col="is_del")
-    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    tx.merge(b3, delete_col="is_del")
+    got = {r.id: r.v for r in TransactionalTable(spark, path, ["id"]).read().collect()}
     assert got == {2: "y2", 3: "z", 4: "w"}
 
 
@@ -173,14 +207,15 @@ def test_streaming_file_source_tumble_to_upsert(spark, tmp_path):
     )
     q = (
         agg.writeStream.outputMode("update")
-        .foreachBatch(foreach_batch_upsert(out, ["window_start", "event_type"]))
+        .foreachBatch(foreach_batch_merge(out, ["window_start", "event_type"]))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
     got = {(r.window_start.isoformat(), r.event_type): (r.n, r.sv)
-           for r in spark.read.parquet(out).collect()}
+           for r in TransactionalTable(
+               spark, out, ["window_start", "event_type"]).read().collect()}
     assert got == {
         ("2024-01-01T00:00:00", "click"): (2, 3.0),
         ("2024-01-01T01:00:00", "view"): (1, 3.0),
