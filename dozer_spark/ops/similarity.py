@@ -1,14 +1,28 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>): exact and
+approximate top-k neighbors by cosine, in three families.
 
-- cosine_sim: native fold (F.zip_with + F.aggregate) — sequential
-  index-order summation, bit-deterministic across engines (no UDF).
-- brute_force_topk: exact baseline; queries broadcast against the corpus,
-  per-query top-k via window rank. O(nq * n) but a single pass — at
-  100 TB this is the verification path, not the serving path.
-- lsh_ann_topk: the scale path — random-hyperplane LSH buckets from
-  md5-seeded deterministic planes; candidates only within the query's
-  bucket (+ optional multi-probe). Approximate: no SQL oracle, tested by
-  recall-vs-brute-force instead.
+- Fold (exact, oracle-gated): cosine is a sequential index-order
+  zip_with/aggregate fold, bit-deterministic across engines, so DuckDB
+  replays it. brute_force_topk, hard_negative_topk, bitext_margin_mine,
+  lsh_ann_topk (md5-seeded hyperplane buckets, optional multi-probe)
+  and StreamingAnnIndex.topk; ivf_ann_topk scores the same way but its
+  live k-means cells leave it rows-only.
+- BLAS fast (equivalence-tested): each (group, block, qblock) cogroup is
+  one numpy matmul with a per-query top-k pre-cut, under one hot-group
+  bound. The *_fast variants, ivf_pq_ann_topk (PQ codes + ADC + exact
+  re-rank), StreamingAnnIndex.topk_fast and IvfAnnIndex.topk. Scores may
+  differ from the fold in the last ulp, so the fold stays the baseline.
+- Frozen geometry (exact, oracle-gated): centroids/codebooks arrive as
+  float literals and cell assignment and probing are fold Column math.
+  ivf_ann_topk_frozen, ivf_pq_ann_topk_frozen, ivf_ann_topk_fast with
+  centroids, and the frozen semdedup ops (semdedup_frozen.py).
+
+Every family ends in the same tails: _rank_topk (the cosine-desc /
+neighbor-asc row_number cut and output select), fed by _fold_topk
+(per-side norms, broadcast query join, fold cosine) or
+_bucketed_blas_topk; frozen cells come from _frozen_cell/_frozen_probe,
+live numpy probes from _probe_cells, and both streaming indexes keep
+their corpus through _IndexCorpus.
 """
 
 from __future__ import annotations
@@ -45,6 +59,46 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _rank_topk(scored: DataFrame, k: int, *extra: Column) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, cosine, ...) rows:
+    cosine desc, ties on neighbor id asc; output (query_id,
+    neighbor_id, *extra, cosine rounded to 6 decimals, long rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
+                                               F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", *extra,
+            F.round("cosine", 6).alias("cosine"),
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
+def _fold_topk(c: DataFrame, q: DataFrame, k: int, on: str | None = None,
+               keep: Column | None = None, extra: tuple = ()) -> DataFrame:
+    """Fold-cosine top-k of corpus c (neighbor_id, cv, ...) against the
+    broadcast query set q (query_id, qv, ...), joined on `on` (a cross
+    join when None) and filtered by `keep` (default: a query never
+    matches itself).
+
+    Norms are computed ONCE PER SIDE below the join (guide §2.3): the
+    per-pair cosine_sim form folds both norms for every pair — 2/3 of
+    the interpreted-HOF work for the same bits (same ops over the same
+    doubles; projections under a join are never inlined upward)."""
+    c = c.withColumn("__cn", _norm(F.col("cv")))
+    q = F.broadcast(q.withColumn("__qn", _norm(F.col("qv"))))
+    pairs = c.crossJoin(q) if on is None else c.join(q, on)
+    if keep is None:
+        keep = F.col("neighbor_id") != F.col("query_id")
+    scored = pairs.filter(keep).withColumn(
+        "cosine",
+        _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
+    )
+    return _rank_topk(scored, k, *extra)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -60,42 +114,15 @@ def brute_force_topk(
     the corpus is scanned once, no shuffle of the corpus side.
     """
     qid = query_id_col or id_col
-    # norms are computed ONCE PER SIDE below the join (guide §2.3):
-    # cosine_sim's per-pair form folds both norms for every pair —
-    # 2/3 of the interpreted-HOF work for the same bits (same ops over
-    # the same doubles, so cosine is bit-identical; projections under
-    # a join are never inlined upward, so the norms stay per-row).
-    q = queries.select(
-        F.col(qid).alias("query_id"), F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("__qn"),
-    )
+    q = queries.select(F.col(qid).alias("query_id"),
+                       F.col(vec_col).alias("qv"))
     # the corpus side of the broadcast join runs at the SCAN's split
     # count (a broadcast join shuffles nothing): a single-row-group
     # parquet corpus pins every interpreted fold on one task (guide §2
     # stragglers; measured flat 8-vs-32-core scaling on the 10x corpus)
     c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
+    return _fold_topk(c, q, k)
 
 
 def hard_negative_topk(
@@ -123,38 +150,15 @@ def hard_negative_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         F.col(label_col).alias("q_label"),
-        _norm(F.col(vec_col)).alias("__qn"),
     )
     c = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         F.col(label_col).alias("neighbor_label"),
-        _norm(F.col(vec_col)).alias("__cn"),
     )  # scan-split rebalance: see brute_force_topk
-    # per-side norms below the join: same bits, 2/3 less per-pair fold
-    # work (see brute_force_topk)
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_label") != F.col("q_label"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("neighbor_label").cast("int").alias("neighbor_label"),
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _fold_topk(
+        c, q, k, keep=F.col("neighbor_label") != F.col("q_label"),
+        extra=(F.col("neighbor_label").cast("int").alias("neighbor_label"),))
 
 
 def hard_negative_topk_fast(
@@ -574,69 +578,74 @@ def ivf_ann_topk(
     fixed seed. Approximate -> no SQL oracle; recall tested vs brute
     force.
     """
-    from pyspark.ml.functions import array_to_vector
-
     qid = query_id_col or id_col
-    # NO scan rebalance here: the corpus feeds the live k-means FIT,
-    # and Spark ML KMeans is partition-sensitive (k-means|| init and
-    # fp aggregation order) — repartitioning would silently change the
-    # trained centroids and every downstream cell. Only the FROZEN
-    # paths (partition-independent literal math) rebalance.
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    n = c.count()
-    ml = c.select("neighbor_id", "cv", array_to_vector(F.col("cv").cast("array<double>")).alias("feat"))
-    model = _fit_quantizer(ml, n, n_centroids, seed)
+    model, ml = _fit_live(corpus, id_col, vec_col, n_centroids, seed,
+                          "ivf_ann_topk")
     c_cells = model.transform(ml).select("neighbor_id", "cv", "cell")
 
-    # query -> its n_probe nearest centroids (centroids are tiny: driver math)
+    # query -> its n_probe nearest centroids (centroids are tiny: the
+    # fitted matrix rides the plan as literals)
     centroids = [list(map(float, v)) for v in model.clusterCenters()]
-    cent_arr = F.expr(_arr2_sql(centroids))
-    q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("qv"))
-    # distance query->each centroid, take n_probe smallest (native exprs)
-    dists = F.transform(
-        cent_arr,
-        lambda cent: F.aggregate(
-            F.zip_with(F.col("qv"), cent, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    q = q.withColumn("__d", dists)
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    pairs = F.arrays_zip(q["__d"].alias("d"), idx.alias("i"))
-    probed = F.slice(F.array_sort(pairs), 1, n_probe)
-    q = q.withColumn("cell", F.explode(F.transform(probed, lambda s: s["i"]))).drop("__d")
+    q = queries.select(
+        F.col(qid).alias("query_id"), F.col(vec_col).alias("qv"),
+    ).withColumn("cell", _frozen_probe(F.col("qv"), centroids, n_probe))
+    return _fold_topk(c_cells, q, k, on="cell")
 
-    # per-side norms below the join: same bits, 2/3 less per-pair fold
-    # work (see brute_force_topk)
-    q = q.withColumn("__qn", _norm(F.col("qv")))
-    c_cells = c_cells.withColumn("__cn", _norm(F.col("cv")))
-    scored = (
-        c_cells.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+
+def _default_n_centroids(n: int) -> int:
+    """Standard IVF sizing: cells of ~sqrt(n) rows (probe cost
+    n_probe*sqrt(n) per query), clamped to [16, 4096]."""
+    return min(4096, max(16, int(math.sqrt(n))))
+
+
+def _fit_live(corpus: DataFrame, id_col: str, vec_col: str,
+              n_centroids: int | None, seed: int, what: str):
+    """Live IVF quantizer fit: (KMeans model, ml) where ml is the corpus
+    as (neighbor_id, cv, feat); n_centroids=None takes the sqrt(n)
+    default. NO scan rebalance: Spark ML KMeans is partition-sensitive
+    (k-means|| init and fp aggregation order) — repartitioning would
+    silently change the trained centroids and every downstream cell.
+    Only the FROZEN paths (partition-independent literal math)
+    rebalance."""
+    from pyspark.ml.functions import array_to_vector
+
+    c = corpus.select(F.col(id_col).alias("neighbor_id"),
+                      F.col(vec_col).alias("cv"))
+    n = c.count()
+    if n == 0:
+        raise ValueError(f"{what}: cannot fit the IVF quantizer on zero "
+                         "vectors")
+    ml = c.select("neighbor_id", "cv",
+                  array_to_vector(F.col("cv").cast("array<double>"))
+                  .alias("feat"))
+    return _fit_quantizer(ml, n, n_centroids or _default_n_centroids(n),
+                          seed), ml
+
+
+def _frozen_cell(vcol: Column, centroids: list[list[float]]) -> Column:
+    """Nearest frozen centroid (squared euclidean, ties on index)."""
+    return F.array_min(_frozen_cell_pairs(vcol, centroids))["i"]
+
+
+def _frozen_probe(vcol: Column, centroids: list[list[float]],
+                  n_probe: int) -> Column:
+    """Generator over the n_probe nearest frozen centroids (sorted
+    (d2, index) pairs) — one output row per probed cell."""
+    return F.explode(F.transform(
+        F.slice(F.array_sort(_frozen_cell_pairs(vcol, centroids)),
+                1, min(n_probe, len(centroids))),
+        lambda s: s["i"],
+    ))
 
 
 def _frozen_cell_pairs(vcol: Column, centroids: list[list[float]]) -> Column:
     """[(d2 to centroid j, j)] for a vector Column against FROZEN
     centroid literals — d2 as the same left-fold the frozen-IVF oracle
     replays with list_sum(list_transform(...)), so array_min / sorted
-    slices over the pairs give bit-identical cells on both engines."""
+    slices over the pairs give bit-identical cells on both engines.
+    The .cast("double") keeps the fold in double whatever the vector's
+    element type (a float32 input would otherwise fold in float32 and
+    break the bit-for-bit oracle claim)."""
     cent_arr = F.expr(_arr2_sql(centroids))
     idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
     d2 = F.transform(
@@ -681,55 +690,18 @@ def ivf_ann_topk_frozen(
     plan), corpus assigned in one scan, queries broadcast to the
     bucket join, each query touches ~n_probe/n_centroids of the corpus.
     """
-    def cell_pairs(vcol: Column) -> Column:
-        return _frozen_cell_pairs(vcol, centroids)
-
     dim = len(centroids[0])
     qid = query_id_col or id_col
     q = queries.select(
         F.col(qid).alias("query_id"),
         _guard_dim(F.col(vec_col), dim, "ivf_ann_topk_frozen").alias("qv"),
-    )
-    q = q.withColumn(
-        "cell",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cell_pairs(F.col("qv"))), 1, n_probe),
-                lambda s: s["i"],
-            )
-        ),
-    )
+    ).withColumn("cell", _frozen_probe(F.col("qv"), centroids, n_probe))
     c = ensure_min_partitions(corpus).select(
         F.col(id_col).alias("neighbor_id"),
         _guard_dim(F.col(vec_col), dim, "ivf_ann_topk_frozen").alias("cv"),
-    ).withColumn("cell", F.array_min(cell_pairs(F.col("cv")))["i"])
+    ).withColumn("cell", _frozen_cell(F.col("cv"), centroids))
     # scan-split rebalance: see brute_force_topk
-
-    # per-side norms below the join: same bits, 2/3 less per-pair fold
-    # work (see brute_force_topk)
-    q = q.withColumn("__qn", _norm(F.col("qv")))
-    c = c.withColumn("__cn", _norm(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _fold_topk(c, q, k, on="cell")
 
 
 def _guard_dim(vec: Column, dim: int, where: str) -> Column:
@@ -752,17 +724,7 @@ def unit_vector(vec: Column) -> Column:
     """L2-normalize a float array Column with the sequential-fold norm
     (sqrt of the left-fold sum of squares, floored at 1e-12) — the
     engine-portable normalization every frozen/oracle path shares."""
-    nrm = F.greatest(
-        F.sqrt(
-            F.aggregate(
-                F.transform(vec, lambda x: x.cast("double")
-                            * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        F.lit(1e-12),
-    )
+    nrm = F.greatest(_norm(vec), F.lit(1e-12))
     return F.transform(vec, lambda x: x.cast("double") / nrm)
 
 
@@ -801,31 +763,11 @@ def ivf_pq_ann_topk_frozen(
     m_sub = len(books)
     n_codes = len(books[0])
     dsub = len(books[0][0])
-    ncent = len(coarse)
     cent_arr = F.expr(_arr2_sql(coarse))
     books_arr = F.expr(
         "array(" + ", ".join(_arr2_sql(book) for book in books) + ")"
     )
-    idx_cent = F.sequence(F.lit(0), F.lit(ncent - 1))
     idx_code = F.sequence(F.lit(0), F.lit(n_codes - 1))
-
-    # Defensive .cast("double") below: unit_vector already yields doubles
-    # for both corpus and query vectors here, so the cast is a noop on this
-    # path — but it keeps the fold precision independent of that call-site
-    # invariant (a float32 input reused through these closures would
-    # otherwise fold in float32 and break the bit-for-bit oracle claim).
-    def cell_pairs(vcol: Column) -> Column:
-        d2 = F.transform(
-            cent_arr,
-            lambda cent: F.aggregate(
-                F.zip_with(vcol, cent,
-                           lambda a, b: (a.cast("double") - b)
-                           * (a.cast("double") - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return F.arrays_zip(d2.alias("d"), idx_cent.alias("i"))
 
     def residual(vcol: Column) -> Column:
         return F.zip_with(
@@ -855,7 +797,7 @@ def ivf_pq_ann_topk_frozen(
             _guard_dim(F.col(vec_col), m_sub * dsub, "ivf_pq_ann_topk_frozen")
         ).alias("cv"),
     )
-    c = c.withColumn("cell", F.array_min(cell_pairs(F.col("cv")))["i"])
+    c = c.withColumn("cell", _frozen_cell(F.col("cv"), coarse))
     c = c.withColumn("rv", residual(F.col("cv")))
     codes = F.transform(
         F.sequence(F.lit(1), F.lit(m_sub)),
@@ -879,15 +821,7 @@ def ivf_pq_ann_topk_frozen(
             _guard_dim(F.col(vec_col), m_sub * dsub, "ivf_pq_ann_topk_frozen")
         ).alias("qv"),
     )
-    q = q.withColumn(
-        "cell",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(cell_pairs(F.col("qv"))), 1, n_probe),
-                lambda s: s["i"],
-            )
-        ),
-    )
+    q = q.withColumn("cell", _frozen_probe(F.col("qv"), coarse, n_probe))
     q = q.withColumn("qr", residual(F.col("qv")))
     lut = F.transform(
         F.sequence(F.lit(1), F.lit(m_sub)),
@@ -923,20 +857,7 @@ def ivf_pq_ann_topk_frozen(
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("cosine", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(cand.withColumn("cosine", cos), k)
 
 
 def lsh_ann_topk(
@@ -969,30 +890,8 @@ def lsh_ann_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         lsh_bucket(vec_col, planes).alias("bucket"),
-        _norm(F.col(vec_col)).alias("__cn"),
     )  # scan-split rebalance: see brute_force_topk
-    # per-side norms below the join: same bits, 2/3 less per-pair fold
-    # work (see brute_force_topk)
-    q = q.withColumn("__qn", _norm(F.col("qv")))
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            _dot(F.col("qv"), F.col("cv")) / (F.col("__qn") * F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _fold_topk(c, q, k, on="bucket")
 
 
 def _split_hot_groups(c: DataFrame, q: DataFrame, group_cols: list,
@@ -1086,17 +985,7 @@ def _bucketed_blas_topk(c: DataFrame, q: DataFrame, group_cols: list,
         .applyInPandas(score, out_schema)
     )
     # merge per-block top-ks (<= n_queries * blocks * k rows — tiny)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def _topk_block_scores(cdf, qdf, k: int, out_cols: list) -> "pd.DataFrame":
@@ -1175,12 +1064,7 @@ def ivf_ann_topk_fast(
     after the shared 6-decimal rounding (equivalence pinned in
     tests/test_ann_clusters.py; exact oracle on ann_ivf_topk_fast).
     """
-    import math
-
     import numpy as np
-    import pandas as pd
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import types as T
 
     qid = query_id_col or id_col
     if centroids is not None:
@@ -1188,54 +1072,46 @@ def ivf_ann_topk_fast(
         q = queries.select(
             F.col(qid).alias("query_id"),
             _guard_dim(F.col(vec_col), dim, "ivf_ann_topk_fast").alias("qv"),
-        ).withColumn(
-            "cell",
-            F.explode(F.transform(
-                F.slice(F.array_sort(
-                    _frozen_cell_pairs(F.col("qv"), centroids)),
-                    1, min(n_probe, len(centroids))),
-                lambda s: s["i"],
-            )),
-        )
+        ).withColumn("cell", _frozen_probe(F.col("qv"), centroids, n_probe))
         c_cells = corpus.select(
             F.col(id_col).alias("neighbor_id"),
             _guard_dim(F.col(vec_col), dim, "ivf_ann_topk_fast").alias("cv"),
-        ).withColumn(
-            "cell",
-            F.array_min(_frozen_cell_pairs(F.col("cv"), centroids))["i"],
-        )
-        return _bucketed_blas_topk(
-            c_cells, q, ["cell"], k,
-            queries.schema[qid].dataType, corpus.schema[id_col].dataType,
-            hot_cell_cap,
-        )
+        ).withColumn("cell", _frozen_cell(F.col("cv"), centroids))
+    else:
+        model, ml = _fit_live(corpus, id_col, vec_col, n_centroids, seed,
+                              "ivf_ann_topk_fast")
+        c_cells = model.transform(ml).select("neighbor_id", "cv", "cell")
+        q = _probe_cells(
+            queries.select(F.col(qid).alias("query_id"),
+                           F.col(vec_col).alias("qv")),
+            np.array([list(map(float, v)) for v in model.clusterCenters()]),
+            n_probe)
+    # merge of each query's n_probe x blocks per-cell top-k lists is tiny
+    return _bucketed_blas_topk(
+        c_cells, q, ["cell"], k,
+        queries.schema[qid].dataType, corpus.schema[id_col].dataType,
+        hot_cell_cap,
+    )
 
-    # NO scan rebalance: the corpus feeds the live k-means FIT (see
-    # ivf_ann_topk — KMeans is partition-sensitive)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    n = c.count()
-    if n_centroids is None:
-        n_centroids = min(4096, max(16, int(math.sqrt(n))))
-    ml = c.select("neighbor_id", "cv",
-                  array_to_vector(F.col("cv").cast("array<double>")).alias("feat"))
-    model = _fit_quantizer(ml, n, n_centroids, seed)
-    c_cells = model.transform(ml).select("neighbor_id", "cv", "cell")
 
-    # query -> n_probe nearest centroids, computed driver-side (the
-    # centroid matrix is tiny) inside the cogroup UDF closure
-    centroids = np.array([list(map(float, v)) for v in model.clusterCenters()])
-    q = queries.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("qv"))
+def _probe_cells(q: DataFrame, C, n_probe: int) -> DataFrame:
+    """(query_id, qv, cell) for each of a query's n_probe nearest
+    centroids of the numpy matrix C (tiny: it rides the UDF closure) —
+    one matmul-expanded _nearest_cells pass per Arrow batch."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-    probe_schema = T.StructType([
-        T.StructField("query_id", queries.schema[qid].dataType),
-        T.StructField("qv", queries.schema[vec_col].dataType),
+    schema = T.StructType([
+        T.StructField("query_id", q.schema["query_id"].dataType),
+        T.StructField("qv", q.schema["qv"].dataType),
         T.StructField("cell", T.IntegerType()),
     ])
 
     def probe_cells(batches):
         for pdf in batches:
             Q = np.array([list(map(float, v)) for v in pdf["qv"]])
-            top = _nearest_cells(Q, centroids, n_probe)
+            top = _nearest_cells(Q, C, n_probe)
             rows = []
             for i in range(len(pdf)):
                 for cell in top[i]:
@@ -1243,14 +1119,7 @@ def ivf_ann_topk_fast(
                                  pdf["qv"].iloc[i], int(cell)))
             yield pd.DataFrame(rows, columns=["query_id", "qv", "cell"])
 
-    probed = q.mapInPandas(probe_cells, probe_schema)
-
-    # merge of each query's n_probe x blocks per-cell top-k lists is tiny
-    return _bucketed_blas_topk(
-        c_cells, probed, ["cell"], k,
-        queries.schema[qid].dataType, corpus.schema[id_col].dataType,
-        hot_cell_cap,
-    )
+    return q.mapInPandas(probe_cells, schema)
 
 
 def lsh_ann_topk_fast(
@@ -1292,8 +1161,6 @@ def lsh_ann_topk_fast(
     strongly clustered embedding spaces use ivf_ann_topk, whose
     centroids adapt to the clusters.
     """
-    import math
-
     if n_planes is None:
         n = corpus.count()
         n_planes = min(24, max(8, math.ceil(math.log2(max(n, 128) / 64))))
@@ -1397,8 +1264,6 @@ def ivf_pq_ann_topk(
     set) -> rows-only gate; recall vs brute force and split==unsplit
     equivalence live in tests/test_ann_clusters.py.
     """
-    import math
-
     import numpy as np
     import pandas as pd
     from pyspark.ml.functions import array_to_vector
@@ -1406,10 +1271,18 @@ def ivf_pq_ann_topk(
 
     from dozer_spark.operators.hints import cache_materialized, maybe_broadcast
 
+    if not 1 <= n_codes <= 256:
+        # codes are stored one byte per subspace
+        raise ValueError(
+            f"ivf_pq_ann_topk: n_codes {n_codes} outside 1..256")
     qid = query_id_col or id_col
     c_raw = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("cv"))
-    dim = len(c_raw.select("cv").first()[0])
+    first = c_raw.select("cv").first()
+    if first is None:
+        raise ValueError("ivf_pq_ann_topk: cannot fit the quantizer on an "
+                         "empty corpus")
+    dim = len(first[0])
     if dim % m_sub != 0:
         raise ValueError(
             f"ivf_pq_ann_topk: dim {dim} not divisible by m_sub {m_sub}")
@@ -1417,10 +1290,7 @@ def ivf_pq_ann_topk(
 
     # normalized corpus: cosine order == L2 order on the unit sphere,
     # so the coarse cells, residuals, and ADC all live in one metric
-    nrm = F.sqrt(F.aggregate(
-        F.transform(F.col("cv"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda a, x: a + x))
-    cn = c_raw.withColumn("__nrm", nrm).select(
+    cn = c_raw.withColumn("__nrm", _norm(F.col("cv"))).select(
         "neighbor_id",
         F.transform(
             F.col("cv"),
@@ -1429,11 +1299,10 @@ def ivf_pq_ann_topk(
         ).alias("cv"),
     )
     n = cn.count()
-    if n_centroids is None:
-        n_centroids = min(4096, max(16, int(math.sqrt(n))))
     ml = cn.select("neighbor_id", "cv",
                    array_to_vector(F.col("cv")).alias("feat"))
-    model = _fit_quantizer(ml, n, n_centroids, seed)
+    model = _fit_quantizer(ml, n, n_centroids or _default_n_centroids(n),
+                           seed)
     c_cells = cache_materialized(
         model.transform(ml).select("neighbor_id", "cv", "cell"))
     centroids = np.array([list(map(float, v)) for v in model.clusterCenters()])
@@ -1566,17 +1435,7 @@ def ivf_pq_ann_topk(
         .join(maybe_broadcast(q_raw), "query_id")
         .withColumn("cosine", cosine_sim(F.col("qv"), F.col("cv")))
     )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc("neighbor_id"))
-    return (
-        refined.withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(refined, k)
 
 
 def _resent_tombstones(ids_tx, rows: DataFrame, bucket_col: str):
@@ -1624,21 +1483,136 @@ def _open_ids_state(spark, store, state_dir: str, name: str,
     return ids_tx
 
 
-class StreamingAnnIndex:
+class _IndexCorpus:
+    """The corpus behind a streaming ANN index: one (neighbor_id, cv,
+    <slot>) row per id, the slot being the LSH bucket or IVF cell the
+    vector falls in. Subclasses set vec_col/id_col and build the rows.
+
+    Ephemeral: an in-memory frame, upserted by anti-join + union and
+    checkpointed. Durable (state_dir): a delta-log DiffStateTable
+    (O(batch) epoch IO, shared crash contract) hash-laid-out BY SLOT, so
+    a probe reads only the state buckets its slots hash to — O(probed
+    slots), not O(corpus) — plus the slim (neighbor_id -> slot) table of
+    _open_ids_state. Both log positions, the geometry and any extra meta
+    commit as one StateStore epoch under the `<name>_*` keys."""
+
+    def __init__(self, spark, state_dir: str | None, state_buckets: int,
+                 name: str, slot: str, geom: dict, cls: str):
+        self._name, self._slot, self._geom = name, slot, geom
+        self._corpus = None  # ephemeral: (neighbor_id, cv, slot)
+        self._store = None
+        if state_dir is None:
+            return
+        from dozer_spark.streaming.dedup import _check_state_geometry
+        from dozer_spark.streaming.incstate import (
+            DiffStateTable,
+            diff_state_path,
+        )
+        from dozer_spark.streaming.state import StateStore
+
+        self._store = StateStore(spark, state_dir)
+        _check_state_geometry(self._store, f"{name}_geom", geom, cls)
+        self._tx = DiffStateTable(
+            spark, diff_state_path(state_dir, name),
+            key_cols=["neighbor_id"],
+            bucket_cols=[slot], n_buckets=state_buckets,
+        )
+        self._ids_tx = _open_ids_state(
+            spark, self._store, state_dir, f"{name}_ids", f"{name}_ids_txv",
+            cls)
+        if self._store.epoch > 0:
+            # restore the log position; probes read slot-pruned
+            self._tx.read_committed(self._store.load_meta(f"{name}_txv"))
+
+    def _latest_per_id(self, vectors: DataFrame) -> DataFrame:
+        """Duplicate ids WITHIN a batch reduce to one row
+        deterministically (the lexicographically-greatest vector digest
+        wins) — otherwise topk could return the same neighbor at two
+        ranks."""
+        vdigest = F.md5(F.concat_ws(",", F.transform(
+            F.col(self.vec_col), lambda x: x.cast("string"))))
+        w = Window.partitionBy(self.id_col).orderBy(F.desc(vdigest))
+        return (
+            vectors.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+
+    def _ingest(self, rows: DataFrame, extra_meta: dict | None = None):
+        """Upsert a batch of (neighbor_id, cv, slot) rows: a re-sent id
+        replaces its old image."""
+        if self._store is None:
+            merged = (
+                rows if self._corpus is None
+                else self._corpus.join(
+                    rows.select("neighbor_id"), "neighbor_id", "left_anti"
+                ).unionByName(rows)
+            )
+            self._corpus = merged.localCheckpoint(eager=True)
+            return
+        rows = rows.persist()
+        # re-sent ids may MOVE slots (the slot is a function of the
+        # vector), so the slot-laid-out state must tombstone the old
+        # image in its old slot before inserting the new one.
+        # Append-only epochs (the common case) skip the probe via the
+        # limit(1) short-circuit and land as fresh-keys deltas
+        # (shuffle-free probe reads).
+        delta = rows.withColumn("__del", F.lit(False))
+        fresh = True
+        if self._store.epoch > 0:
+            # resent-id probe on the slim (id -> slot) state, pruned to
+            # the batch ids' hash buckets — O(batch) per append-only
+            # epoch, never a full-state scan; the old image's slot comes
+            # from the slim state, so the tombstones never read the wide
+            # vector state at all
+            tomb = _resent_tombstones(self._ids_tx, rows, self._slot)
+            if tomb is not None:
+                fresh = False
+                delta = delta.unionByName(tomb)
+        name, epoch = self._name, self._store.epoch + 1
+        meta = {
+            f"{name}_txv": self._tx.advance(
+                delta, epoch=epoch, app_id=f"{name}_idx",
+                fresh_keys=fresh),
+            f"{name}_ids_txv": self._ids_tx.advance(
+                rows.select("neighbor_id", self._slot)
+                .withColumn("__del", F.lit(False)),
+                epoch=epoch, app_id=f"{name}_idx_ids", fresh_keys=fresh),
+            f"{name}_geom": self._geom,
+            **(extra_meta or {}),
+        }
+        for key, value in meta.items():
+            self._store.stage_meta(key, value)
+        self._store.commit()
+        rows.unpersist()
+
+    def _require(self) -> None:
+        if (self._corpus is None if self._store is None
+                else self._store.epoch == 0):
+            raise ValueError("index is empty — add_batch first")
+
+    def _live(self, slots: DataFrame) -> DataFrame:
+        """The corpus rows a probe over `slots` can match: durable state
+        read ONLY in the state buckets the slots hash to; ephemeral
+        indexes return the in-memory frame."""
+        self._require()
+        if self._store is None:
+            return self._corpus
+        return self._tx.read_live_pruned(self._tx.touched_bucket_ids(slots))
+
+
+class StreamingAnnIndex(_IndexCorpus):
     """Incrementally maintained LSH ANN index: vector batches append to
     a bucketed corpus state (one bucket computation per NEW vector,
     never recomputing old ones); query batches probe only their bucket
     — the streaming-ingest face of lsh_ann_topk.
 
-    State = (neighbor_id, cv, bucket): one row per vector, delta-log
-    DiffStateTable when durable (O(batch) epoch IO, shared crash
-    contract), hash-laid-out BY THE LSH BUCKET (bucket_cols=["bucket"])
-    so a serving probe reads only the state buckets the queries hash
-    to — O(probed buckets), not O(corpus). The bucket assignment is a
-    deterministic function of the vector (md5-derived hyperplanes), so
-    an index built across ANY batch partitioning serves identical
-    results to the one-shot batch build — which is the exact oracle
-    cdc_streaming_ann_index replays.
+    State = (neighbor_id, cv, bucket), laid out by LSH bucket
+    (_IndexCorpus, state dirs `ann` / `ann_ids`). The bucket assignment
+    is a deterministic function of the vector (md5-derived
+    hyperplanes), so an index built across ANY batch partitioning
+    serves identical results to the one-shot batch build — which is the
+    exact oracle cdc_streaming_ann_index replays.
     """
 
     def __init__(self, spark, vec_col: str, id_col: str,
@@ -1649,116 +1623,28 @@ class StreamingAnnIndex:
         self.id_col = id_col
         self.n_planes = n_planes
         self.dim = dim
-        self._corpus = None  # ephemeral: (neighbor_id, cv, bucket)
-        self._store = None
-        if state_dir is not None:
-            from dozer_spark.streaming.incstate import (
-                DiffStateTable,
-                diff_state_path,
-            )
-            from dozer_spark.streaming.state import StateStore
-
-            self._store = StateStore(spark, state_dir)
-            from dozer_spark.streaming.dedup import _check_state_geometry
-
-            _check_state_geometry(
-                self._store, "ann_geom",
-                {"n_planes": self.n_planes, "dim": self.dim},
-                "StreamingAnnIndex",
-            )
-            self._tx = DiffStateTable(
-                spark, diff_state_path(state_dir, "ann"),
-                key_cols=["neighbor_id"],
-                bucket_cols=["bucket"], n_buckets=state_buckets,
-            )
-            self._ids_tx = _open_ids_state(
-                spark, self._store, state_dir, "ann_ids", "ann_ids_txv",
-                "StreamingAnnIndex")
-            if self._store.epoch > 0:
-                # restore the log position; probes read bucket-pruned
-                self._tx.read_committed(self._store.load_meta("ann_txv"))
+        super().__init__(
+            spark, state_dir, state_buckets, "ann", "bucket",
+            {"n_planes": n_planes, "dim": dim}, "StreamingAnnIndex")
 
     def add_batch(self, vectors: DataFrame) -> None:
         """Index a batch of new vectors (upsert by id: a re-sent vector
-        replaces its old image — its bucket moves with it). Duplicate
-        ids WITHIN a batch reduce to one row deterministically (the
-        lexicographically-greatest vector digest wins) — otherwise topk
-        could return the same neighbor at two ranks."""
+        replaces its old image — its bucket moves with it; duplicate ids
+        within a batch reduce to one, see _latest_per_id)."""
         planes = _hyperplanes(self.n_planes, self.dim)
-        vdigest = F.md5(
-            F.concat_ws(
-                ",", F.transform(F.col(self.vec_col),
-                                 lambda x: x.cast("string"))
-            )
-        )
-        w = Window.partitionBy(self.id_col).orderBy(F.desc(vdigest))
-        rows = (
-            vectors.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .select(
-                F.col(self.id_col).alias("neighbor_id"),
-                F.col(self.vec_col).alias("cv"),
-                lsh_bucket(self.vec_col, planes).alias("bucket"),
-            )
-        )
-        if self._store is not None:
-            rows = rows.persist()
-            # re-sent ids may MOVE buckets (the bucket is a function of
-            # the vector), so the bucket-laid-out state must tombstone
-            # the old image in its old bucket before inserting the new
-            # one. Append-only epochs (the common case) skip the probe
-            # via the limit(1) short-circuit and land as fresh-keys
-            # deltas (shuffle-free probe reads).
-            delta = rows.withColumn("__del", F.lit(False))
-            fresh = True
-            if self._store.epoch > 0:
-                # resent-id probe on the slim (id -> bucket) state,
-                # pruned to the batch ids' hash buckets — O(batch) per
-                # append-only epoch, never a full-state scan; the old
-                # image's bucket comes from the slim state, so the
-                # tombstones never read the wide vector state at all
-                tomb = _resent_tombstones(self._ids_tx, rows, "bucket")
-                if tomb is not None:
-                    fresh = False
-                    delta = delta.unionByName(tomb)
-            meta = self._tx.advance(
-                delta, epoch=self._store.epoch + 1, app_id="ann_idx",
-                fresh_keys=fresh,
-            )
-            ids_meta = self._ids_tx.advance(
-                rows.select("neighbor_id", "bucket")
-                .withColumn("__del", F.lit(False)),
-                epoch=self._store.epoch + 1, app_id="ann_idx_ids",
-                fresh_keys=fresh,
-            )
-            self._store.stage_meta("ann_txv", meta)
-            self._store.stage_meta("ann_ids_txv", ids_meta)
-            self._store.stage_meta(
-                "ann_geom", {"n_planes": self.n_planes, "dim": self.dim})
-            self._store.commit()
-            rows.unpersist()
-        else:
-            merged = (
-                rows if self._corpus is None
-                else self._corpus.join(
-                    rows.select("neighbor_id"), "neighbor_id", "left_anti"
-                ).unionByName(rows)
-            )
-            self._corpus = merged.localCheckpoint(eager=True)
+        self._ingest(self._latest_per_id(vectors).select(
+            F.col(self.id_col).alias("neighbor_id"),
+            F.col(self.vec_col).alias("cv"),
+            lsh_bucket(self.vec_col, planes).alias("bucket"),
+        ))
 
-    def _live_corpus(self, probe_buckets) -> DataFrame:
-        """The corpus rows a probe can match: durable indexes read ONLY
-        the state buckets the probe's LSH buckets hash to; ephemeral
-        indexes return the in-memory frame."""
-        if self._store is not None:
-            if self._store.epoch == 0:
-                raise ValueError("index is empty — add_batch first")
-            bids = self._tx.touched_bucket_ids(probe_buckets)
-            return self._tx.read_live_pruned(bids)
-        if self._corpus is None:
-            raise ValueError("index is empty — add_batch first")
-        return self._corpus
+    def _bucketed(self, queries: DataFrame, query_id_col: str | None):
+        planes = _hyperplanes(self.n_planes, self.dim)
+        return queries.select(
+            F.col(query_id_col or self.id_col).alias("query_id"),
+            F.col(self.vec_col).alias("qv"),
+            lsh_bucket(self.vec_col, planes).alias("bucket"),
+        )
 
     def topk(self, queries: DataFrame, k: int = 5,
              query_id_col: str | None = None) -> DataFrame:
@@ -1766,39 +1652,8 @@ class StreamingAnnIndex:
         (same plan as the batch lsh_ann_topk probe: bounded query set
         broadcast into the bucket join, per-query window top-k; durable
         state is read bucket-pruned — O(probed buckets))."""
-        planes = _hyperplanes(self.n_planes, self.dim)
-        qid = query_id_col or self.id_col
-        q = queries.select(
-            F.col(qid).alias("query_id"),
-            F.col(self.vec_col).alias("qv"),
-            lsh_bucket(self.vec_col, planes).alias("bucket"),
-        )
-        corpus = self._live_corpus(q.select("bucket"))
-        # per-side norms below the join: same bits, 2/3 less per-pair
-        # fold work (see brute_force_topk)
-        q = q.withColumn("__qn", _norm(F.col("qv")))
-        corpus = corpus.withColumn("__cn", _norm(F.col("cv")))
-        scored = (
-            corpus.join(F.broadcast(q), "bucket")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cosine",
-                _dot(F.col("qv"), F.col("cv"))
-                / (F.col("__qn") * F.col("__cn")),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id",
-                F.round("cosine", 6).alias("cosine"),
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
+        q = self._bucketed(queries, query_id_col)
+        return _fold_topk(self._live(q.select("bucket")), q, k, on="bucket")
 
     def topk_fast(self, queries: DataFrame, k: int = 5,
                   query_id_col: str | None = None,
@@ -1813,23 +1668,17 @@ class StreamingAnnIndex:
         equivalence-tested against it, same as the batch fast variants.
         Hot buckets split at hot_bucket_cap via the shared
         _bucketed_blas_topk bound."""
-        planes = _hyperplanes(self.n_planes, self.dim)
-        qid = query_id_col or self.id_col
-        q = queries.select(
-            F.col(qid).alias("query_id"),
-            F.col(self.vec_col).alias("qv"),
-            lsh_bucket(self.vec_col, planes).alias("bucket"),
-        )
-        corpus = self._live_corpus(q.select("bucket"))
+        q = self._bucketed(queries, query_id_col)
+        corpus = self._live(q.select("bucket"))
         return _bucketed_blas_topk(
             corpus, q, ["bucket"], k,
-            queries.schema[qid].dataType,
+            q.schema["query_id"].dataType,
             corpus.schema["neighbor_id"].dataType,
             hot_bucket_cap,
         )
 
 
-class IvfAnnIndex:
+class IvfAnnIndex(_IndexCorpus):
     """Incrementally maintained IVF ANN index — the clustered-space
     counterpart of StreamingAnnIndex and the API that actually delivers
     the fit-amortization the batch path can only note in prose: the
@@ -1840,8 +1689,8 @@ class IvfAnnIndex:
     dozer has no ANN surface — this is part of the beyond-reference
     training-data layer).
 
-    State = (neighbor_id, cv, cell): one row per vector, delta-log
-    DiffStateTable when durable. The centroid matrix persists in
+    State = (neighbor_id, cv, cell), laid out by cell (_IndexCorpus,
+    state dirs `ivf` / `ivf_ids`). The centroid matrix persists in
     StateStore meta, so a resumed index serves the IDENTICAL cells;
     geometry (n_centroids, dim, seed) is guarded the same way as the
     other durable operators — a mismatched resume raises instead of
@@ -1861,53 +1710,18 @@ class IvfAnnIndex:
         self.id_col = id_col
         self.n_centroids = n_centroids
         self.seed = seed
+        super().__init__(
+            spark, state_dir, state_buckets, "ivf", "cell",
+            {"n_centroids": n_centroids, "seed": seed}, "IvfAnnIndex")
         self._centroids = None  # list[list[float]] once fit
-        self._corpus = None     # ephemeral: (neighbor_id, cv, cell)
-        self._store = None
-        if state_dir is not None:
-            from dozer_spark.streaming.dedup import _check_state_geometry
-            from dozer_spark.streaming.incstate import (
-                DiffStateTable,
-                diff_state_path,
-            )
-            from dozer_spark.streaming.state import StateStore
-
-            self._store = StateStore(spark, state_dir)
-            _check_state_geometry(
-                self._store, "ivf_geom",
-                {"n_centroids": self.n_centroids, "seed": self.seed},
-                "IvfAnnIndex",
-            )
-            self._tx = DiffStateTable(
-                spark, diff_state_path(state_dir, "ivf"),
-                key_cols=["neighbor_id"],
-                bucket_cols=["cell"], n_buckets=state_buckets,
-            )
-            self._ids_tx = _open_ids_state(
-                spark, self._store, state_dir, "ivf_ids", "ivf_ids_txv",
-                "IvfAnnIndex")
-            if self._store.epoch > 0:
-                meta = self._store.load_meta("ivf_centroids")
-                self._centroids = meta["centroids"]
-                # restore the log position; probes read cell-pruned
-                self._tx.read_committed(self._store.load_meta("ivf_txv"))
+        if self._store is not None and self._store.epoch > 0:
+            self._centroids = self._store.load_meta(
+                "ivf_centroids")["centroids"]
 
     def _fit(self, batch: DataFrame) -> None:
-        import math
-
-        from pyspark.ml.functions import array_to_vector
-
-        c = batch.select(F.col(self.id_col).alias("neighbor_id"),
-                         F.col(self.vec_col).alias("cv"))
-        n = c.count()
-        if n == 0:
-            raise ValueError("cannot fit the IVF quantizer on an "
-                             "empty first batch")
-        k = self.n_centroids or min(4096, max(16, int(math.sqrt(n))))
-        ml = c.select(
-            "neighbor_id", "cv",
-            array_to_vector(F.col("cv").cast("array<double>")).alias("feat"))
-        model = _fit_quantizer(ml, n, k, self.seed)
+        model, _ = _fit_live(batch, self.id_col, self.vec_col,
+                             self.n_centroids, self.seed,
+                             "IvfAnnIndex first batch")
         self._centroids = [list(map(float, v))
                            for v in model.clusterCenters()]
 
@@ -1943,63 +1757,11 @@ class IvfAnnIndex:
 
     def add_batch(self, vectors: DataFrame) -> None:
         """Index a batch (upsert by id, same within-batch dedup rule as
-        StreamingAnnIndex: the lexicographically-greatest vector digest
-        wins). The FIRST batch also fits the quantizer."""
+        StreamingAnnIndex). The FIRST batch also fits the quantizer."""
         if self._centroids is None:
             self._fit(vectors)
-        vdigest = F.md5(
-            F.concat_ws(
-                ",", F.transform(F.col(self.vec_col),
-                                 lambda x: x.cast("string"))
-            )
-        )
-        w = Window.partitionBy(self.id_col).orderBy(F.desc(vdigest))
-        uniq = (
-            vectors.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        rows = self._assign(uniq)
-        if self._store is not None:
-            rows = rows.persist()
-            # bucket-moving re-sends: tombstone old images (see
-            # StreamingAnnIndex.add_batch); append-only epochs are
-            # fresh-keys deltas
-            delta = rows.withColumn("__del", F.lit(False))
-            fresh = True
-            if self._store.epoch > 0:
-                # O(batch) resent probe on the slim (id -> cell) state
-                # (see StreamingAnnIndex / _resent_tombstones)
-                tomb = _resent_tombstones(self._ids_tx, rows, "cell")
-                if tomb is not None:
-                    fresh = False
-                    delta = delta.unionByName(tomb)
-            meta = self._tx.advance(
-                delta, epoch=self._store.epoch + 1, app_id="ivf_idx",
-                fresh_keys=fresh,
-            )
-            ids_meta = self._ids_tx.advance(
-                rows.select("neighbor_id", "cell")
-                .withColumn("__del", F.lit(False)),
-                epoch=self._store.epoch + 1, app_id="ivf_idx_ids",
-                fresh_keys=fresh,
-            )
-            self._store.stage_meta("ivf_txv", meta)
-            self._store.stage_meta("ivf_ids_txv", ids_meta)
-            self._store.stage_meta("ivf_geom", {
-                "n_centroids": self.n_centroids, "seed": self.seed})
-            self._store.stage_meta("ivf_centroids",
-                                   {"centroids": self._centroids})
-            self._store.commit()
-            rows.unpersist()
-        else:
-            merged = (
-                rows if self._corpus is None
-                else self._corpus.join(
-                    rows.select("neighbor_id"), "neighbor_id", "left_anti"
-                ).unionByName(rows)
-            )
-            self._corpus = merged.localCheckpoint(eager=True)
+        self._ingest(self._assign(self._latest_per_id(vectors)),
+                     {"ivf_centroids": {"centroids": self._centroids}})
 
     def topk(self, queries: DataFrame, k: int = 5, n_probe: int = 4,
              query_id_col: str | None = None,
@@ -2011,43 +1773,19 @@ class IvfAnnIndex:
         pytest-pinned. Durable state is laid out by cell and read
         CELL-pruned — O(probed cells), not O(corpus)."""
         import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
 
-        if self._corpus is None and (
-                self._store is None or self._store.epoch == 0):
-            raise ValueError("index is empty — add_batch first")
-        C = np.array(self._centroids)
+        self._require()
         qid = query_id_col or self.id_col
-        q = queries.select(F.col(qid).alias("query_id"),
-                           F.col(self.vec_col).alias("qv"))
-        probe_schema = T.StructType([
-            T.StructField("query_id", queries.schema[qid].dataType),
-            T.StructField("qv", queries.schema[self.vec_col].dataType),
-            T.StructField("cell", T.IntegerType()),
-        ])
-
-        def probe(batches):
-            for pdf in batches:
-                Q = np.array([list(map(float, v)) for v in pdf["qv"]])
-                top = _nearest_cells(Q, C, n_probe)
-                rows = []
-                for i in range(len(pdf)):
-                    for cell in top[i]:
-                        rows.append((pdf["query_id"].iloc[i],
-                                     pdf["qv"].iloc[i], int(cell)))
-                yield pd.DataFrame(rows,
-                                   columns=["query_id", "qv", "cell"])
-
-        probed = q.mapInPandas(probe, probe_schema)
+        probed = _probe_cells(
+            queries.select(F.col(qid).alias("query_id"),
+                           F.col(self.vec_col).alias("qv")),
+            np.array(self._centroids), n_probe)
         if self._store is not None:
             from dozer_spark.operators.hints import cache_materialized
 
+            # the probe feeds both the pruned read and the join
             probed = cache_materialized(probed)
-            corpus = self._tx.read_live_pruned(
-                self._tx.touched_bucket_ids(probed.select("cell")))
-        else:
-            corpus = self._corpus
+        corpus = self._live(probed.select("cell"))
         return _bucketed_blas_topk(
             corpus, probed, ["cell"], k,
             queries.schema[qid].dataType,

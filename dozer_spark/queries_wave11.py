@@ -29,7 +29,7 @@ def _cm_literal() -> tuple[str, int, int]:
 def _frozen_assign_ctes(cm: str, ncent: int, dim: int) -> str:
     """Shared oracle CTEs: L2-normalize (sequential fold, 1e-12 floor),
     then argmin squared-euclidean cell with ties on centroid index —
-    the replay of unit_vector + _frozen_cells."""
+    the replay of unit_vector + _frozen_cell."""
     return f"""
     cm AS (SELECT {cm} AS c),
     nv AS (

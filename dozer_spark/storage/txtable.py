@@ -389,9 +389,12 @@ class TransactionalTable:
         and duplicate CDF rows. A batch_id at or below the last recorded
         one is a NO-OP returning the current version.
 
-        Cost per merge is exactly TWO Spark jobs: the touched-bucket key
+        Cost per merge is TWO Spark actions: the touched-bucket key
         scan, and ONE combined write that produces both the new bucket
-        data and the change feed (see _write_version).
+        data and the change feed (see _write_version). With adaptive
+        execution each query stage of an action runs as its own job, so
+        the job count is higher (4 + 6 jobs for a steady CDC epoch's
+        aggregate changelog, per tools/epoch_jobs.py).
         """
         if self._applied(batch_id, app_id):
             return self.version

@@ -393,6 +393,69 @@ def test_ivf_index_matches_one_shot_batch(catalog):
     assert len(go & wa) >= len(wa) - 1
 
 
+@pytest.mark.parametrize("cls,slot,init_kw,topk_kw", [
+    ("StreamingAnnIndex", "bucket", {"n_planes": 4, "dim": 8}, {}),
+    ("IvfAnnIndex", "cell", {"n_centroids": 4}, {"n_probe": 1}),
+])
+def test_ann_index_moved_id_durable_equals_ephemeral(spark, tmp_path, cls,
+                                                     slot, init_kw, topk_kw):
+    """Re-sending an id with a vector in another bucket/cell: the
+    durable index (pruned read after the tombstone upsert) serves the
+    same top-k as the ephemeral index (anti-join + union), and the
+    moved id is scored only by its new vector."""
+    import math
+    import random
+
+    from dozer_spark.ops import similarity
+
+    rnd = random.Random(3)
+    vecs = {i: [rnd.uniform(-1, 1) for _ in range(8)] for i in range(60)}
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(list(vecs.items()), schema)
+    make = getattr(similarity, cls)
+    eph = make(spark, "embedding", "vec_id", **init_kw)
+    dur = make(spark, "embedding", "vec_id",
+               state_dir=str(tmp_path / "idx"), **init_kw)
+    for idx in (eph, dur):
+        idx.add_batch(df)
+
+    def slot_of_0():
+        return dur._tx.read_live().filter("neighbor_id = 0").first()[slot]
+
+    old_slot = slot_of_0()
+    if cls == "StreamingAnnIndex":
+        new_vec = [-x for x in vecs[0]]  # every hyperplane sign flips
+    else:
+        assert eph._centroids == dur._centroids
+        new_vec = list(dur._centroids[(old_slot + 1) % 4])
+    moved = spark.createDataFrame([(0, new_vec)], schema)
+    for idx in (eph, dur):
+        idx.add_batch(moved)
+    assert slot_of_0() != old_slot
+    new_vec = moved.first()["embedding"]  # float32-rounded, as stored
+
+    # queries: the new vector, the old vector, and a few corpus vectors
+    q = spark.createDataFrame(
+        [(-1, new_vec), (-2, vecs[0])]
+        + [(i, vecs[i]) for i in (5, 17, 33)], schema)
+    got = sorted(map(tuple, dur.topk(q, k=5, **topk_kw).collect()))
+    assert got == sorted(map(tuple, eph.topk(q, k=5, **topk_kw).collect()))
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / math.sqrt(sum(x * x for x in a) * sum(x * x for x in b))
+
+    qv = {-1: new_vec, -2: q.filter("vec_id = -2").first()["embedding"]}
+    qv.update({i: q.filter(f"vec_id = {i}").first()["embedding"]
+               for i in (5, 17, 33)})
+    hits = [r for r in got if r[1] == 0]
+    assert (-1, 0, 1.0, 1) in hits
+    assert all(r[0] != -2 for r in hits)  # old image is gone
+    for qid, _, c, _ in hits:
+        assert abs(c - cos(qv[qid], new_vec)) < 2e-6
+    assert len({r[0] for r in hits}) == len(hits)  # one image per query
+
+
 @pytest.mark.slow
 def test_ivf_index_incremental_frozen_quantizer_and_resume(spark, tmp_path):
     """The quantizer fits on the FIRST batch and freezes; a crashed

@@ -2,7 +2,7 @@
 determinism, the exact-re-rank contract (returned cosines are the TRUE
 cosines of the returned pairs), split==unsplit equivalence under a
 forced tiny cell cap, codebook shape/compression contract, and the
-dim % m_sub guard."""
+dim % m_sub, n_codes and empty-corpus guards."""
 
 from __future__ import annotations
 
@@ -116,3 +116,19 @@ def test_ivf_pq_tiny_corpus(spark):
     assert len(out) > 0
     for r in out:
         assert r.neighbor_id != r.query_id and 1 <= r.rank <= 2
+
+
+@pytest.mark.parametrize("n_codes", [0, 257])
+def test_ivf_pq_rejects_codes_that_overflow_a_byte(catalog, n_codes):
+    # codes are stored one byte per subspace: 257 would wrap to 1
+    e = catalog.df("embeddings")
+    q = e.filter(F.col("vec_id") < 5)
+    with pytest.raises(ValueError, match="n_codes"):
+        ivf_pq_ann_topk(e, q, "embedding", "vec_id", n_codes=n_codes)
+
+
+def test_ivf_pq_empty_corpus_raises(catalog):
+    e = catalog.df("embeddings")
+    with pytest.raises(ValueError, match="ivf_pq_ann_topk: .*empty corpus"):
+        ivf_pq_ann_topk(e.filter(F.col("vec_id") < 0),
+                        e.filter(F.col("vec_id") < 5), "embedding", "vec_id")

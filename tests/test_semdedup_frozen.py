@@ -106,13 +106,12 @@ def test_frozen_cluster_sample_quota_and_determinism(spark):
     rows = got.collect()
     # quotas: recompute the driver arithmetic independently
     counts = {}
-    from dozer_spark.ops.semdedup_frozen import _frozen_cells
-    from dozer_spark.ops.similarity import unit_vector
+    from dozer_spark.ops.similarity import _frozen_cell, unit_vector
 
     asn = e.select(
         "vec_id",
-        _frozen_cells(unit_vector(F.col("embedding")),
-                      FROZEN_UNIT_CENTROIDS_16x64).alias("cell"))
+        _frozen_cell(unit_vector(F.col("embedding")),
+                     FROZEN_UNIT_CENTROIDS_16x64).alias("cell"))
     for r in asn.collect():
         counts[r["cell"]] = counts.get(r["cell"], 0) + 1
     wsum = 0.0
