@@ -101,14 +101,6 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None,
         file_backed = bool(df.inputFiles())
     except Exception:
         file_backed = False
-    # A/B knob (SCALING.md evidence): "always" restores the pre-gate
-    # behavior — both rebalance triggers fire regardless of file
-    # backing — so the cost/benefit of the in-memory skip is measurable
-    # under bench.py without a code edit. Default is the gated design.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_REBALANCE_MODE") == "always":
-        file_backed = True
     underpartitioned = n_parts < max(2, target // 2)
     if not file_backed:
         if force and underpartitioned:

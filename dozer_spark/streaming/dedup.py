@@ -4,17 +4,58 @@
   dedup over an unbounded stream with bounded state (the watermark
   bounds how long a key is remembered). This is the streaming face of
   ops/dedup.exact_dedup.
-- For near-dup (MinHash/SimHash) on streams, compute signatures per
-  micro-batch (stateless, ops/dedup.minhash_signatures) and advance a
-  signature store keyed by band (StreamingMinHashDedup /
-  StreamingSimHashDedup: a DiffStateTable when durable); new docs probe
-  the store for collisions. The signature computation is the same code
-  path batch and streaming — only the store differs.
+- Near-dup streams (StreamingMinHashDedup, StreamingSimHashDedup here,
+  streaming/fuzzy.StreamingFuzzyIndex) check each micro-batch against
+  everything indexed before it without recomputing old signatures. They
+  share one probe-key loop, `_ProbeKeyStream`; a subclass supplies only
+  the batch's probe-key explode (MinHash bands, SimHash chunks, fuzzy
+  deletion variants — the same helpers the batch ops use, so streaming
+  output cannot drift from its batch oracle), the carried columns and
+  the verify step. Per batch:
+
+  1. admit: drop within-batch duplicate ids and ids already indexed
+     (at-least-once sources re-deliver; ids are immutable identities,
+     first write wins);
+  2. bounded recall (ts_col/retain): advance the watermark to the max
+     ts seen and drop rows older than watermark - retain — they could
+     never pair;
+  3. new-vs-new pairs through the batch self-join
+     (`ops.dedup._blocked_self_join_pairs`: skew probe and hot-key
+     fragment split, so a pathological batch is handled like a
+     pathological corpus);
+  4. new-vs-old pairs through one equi-join of the batch's probe keys
+     with the state's, canonically oriented (id_a < id_b, carried
+     columns from the matching side). Durable state is bucketed by the
+     probe key and read only in the buckets the batch's keys hash to
+     (`DiffStateTable.read_live_pruned`), so the probe costs O(matched
+     buckets), not O(state), and the batch side broadcasts under the
+     size gate so the state side is a pruned scan with no shuffle;
+  5. verify each candidate exactly (Jaccard, hamming, levenshtein);
+  6. advance state: the batch's probe keys and a per-id table (the
+     seen-id filter of step 1; MinHash keeps its token-hash sets there
+     for verify). Durable state is two delta-log DiffStateTables
+     (O(batch) epoch IO) committed with the watermark and the geometry;
+     ephemeral state is an append-only union of checkpointed batches.
+
+  A pair is emitted exactly once — in the epoch its later member first
+  arrives — because keys are deterministic in the row and old ids are
+  skipped, so the union of all emitted pairs equals the batch op over
+  the whole corpus: the oracle the cdc_streaming_* queries replay. With
+  retain set, a pair is emitted only when both members are inside the
+  window at the later member's arrival; correctness comes from the
+  probe-side cutoff filter, and the physical prune of out-of-window
+  state is amortized over prune_every batches, so state is O(window).
+  Re-delivery idempotence then holds within the window (a row re-sent
+  after its state was pruned re-enters as new), the same bounded-state
+  tradeoff as Spark's dropDuplicatesWithinWatermark.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from dozer_spark.streaming.state import EventTimeRetention, StateStore
 
 
 def _check_state_geometry(store, key: str, geom: dict, what: str) -> None:
@@ -49,34 +90,299 @@ def streaming_exact_dedup(df: DataFrame, keys: list[str], ts_col: str,
     return wm.dropDuplicatesWithinWatermark(keys)
 
 
-class StreamingMinHashDedup:
-    """Incremental near-dup detection: each micro-batch of documents is
-    checked against the ENTIRE accumulated corpus without ever
-    recomputing old signatures — the production shape of corpus dedup
-    (ingest continuously, dedup on arrival).
+class _ProbeKeyStream(EventTimeRetention):
+    """The near-dup loop of the module docstring. Subclasses set the
+    class spec below and implement `_geom`, `_explode`, `_id_rows` and
+    `_verify`.
 
-    State = the LSH band table (band, band_key, doc id, token-set size)
-    plus the per-doc 60-bit token-hash sets for exact-Jaccard
-    verification — both O(corpus) but tiny per doc (ints, not text),
-    and both delta-log DiffStateTables when durable (O(batch) epoch IO,
-    the shared crash contract). Per batch:
+    Durable state (state_dir) is two DiffStateTables under one
+    StateStore: the probe-key table `_keytx`, keyed by a digest of
+    (probe key, id) and hash-bucketed by the probe key into
+    state_buckets dirs (the probe-prune granularity and the
+    deployment's parallelism lever; a resumed state keeps the count it
+    was built with), and the per-id table `_ids_tx`, whose live frame is
+    `_seen`. Ephemeral state is `_keys`, plus `_seen` when the verify
+    step reads it (`_IDS_IN_MEMORY`); without it the seen-id filter
+    projects `_keys`."""
 
-    1. signatures for the NEW docs only (the one CPU-heavy scan);
-    2. new-vs-new pairs via the batch machinery (skew probe + hot-band
-       fragment split — a pathological batch is handled exactly like a
-       pathological corpus);
-    3. new-vs-old candidates via one equi-join of the batch's bands
-       against the state bands — the probe side is batch-sized, so
-       bucket skew is bounded by the batch, and AQE splits what's left;
-    4. exact verify on token-hash intersection, same as batch.
+    _KEYS: tuple[str, ...]       # probe-key columns = state bucket columns
+    _DIGEST: str                 # probe-key state's digest key column
+    _STATE: tuple[str, str]      # state dir names: probe keys, per-id
+    _APPS: tuple[str, str]       # advance app ids: probe keys, per-id
+    _TXV: tuple[str, str]        # meta keys of the two log positions
+    _META: str                   # prefix of the geometry/watermark meta keys
+    _CARRY: tuple[tuple[str, str, str], ...] = ()  # (out_a, out_b, src)
+    _pair_pred: str | None = None  # extra pair predicate, aliases a/b
+    _IDS_IN_MEMORY = False
+    _ROW_ID: str | None = None   # id/ts column names in the admitted rows
+    _ROW_TS: str | None = None   # (default: id_col / ts_col)
 
-    Every unordered pair is emitted EXACTLY once (when its later member
-    arrives, or in its members' shared batch): band keys are
-    deterministic functions of the text, so the union of all emitted
-    pairs equals the batch `minhash_lsh_pairs` over the full corpus —
-    which is the exact oracle the cdc_streaming_minhash_dedup query
-    replays.
+    def __init__(self, spark, id_col: str, state_dir: str | None,
+                 broadcast_gate_bytes: int | None, ts_col: str | None,
+                 retain: str | None, prune_every: int, state_buckets: int):
+        if retain is not None and ts_col is None:
+            raise ValueError("retain requires ts_col")
+        self.spark = spark
+        self.id_col = id_col
+        self.gate = broadcast_gate_bytes
+        self.ts_col = ts_col
+        self.retain = retain
+        self.prune_every = prune_every
+        self._id = self._ROW_ID or id_col
+        self._ts = self._ROW_TS or ts_col
+        self._watermark = None
+        self._batches = 0
+        self._keys = None
+        self._seen = None
+        self._store = None
+        self._prev_caches: list = []
+        if state_dir is None:
+            return
+        from dozer_spark.streaming.incstate import (
+            DiffStateTable,
+            diff_state_path,
+        )
+
+        name = type(self).__name__
+        self._store = StateStore(spark, state_dir)
+        _check_state_geometry(self._store, f"{self._META}_geom",
+                              self._geom(), name)
+        self._keytx = DiffStateTable(
+            spark, diff_state_path(state_dir, self._STATE[0]),
+            key_cols=[self._DIGEST], internal_key=True,
+            bucket_cols=list(self._KEYS), n_buckets=state_buckets,
+        )
+        self._ids_tx = DiffStateTable(
+            spark, diff_state_path(state_dir, self._STATE[1]),
+            key_cols=[self._id],
+        )
+        if self._store.epoch == 0:
+            return
+        ids_meta = self._store.load_meta(self._TXV[1])
+        if ids_meta is None:
+            raise ValueError(
+                f"{name}: durable state at {state_dir!r} "
+                "predates the bucketed-probe layout "
+                f"(no {self._STATE[1]} state); delete the state dir to rebuild"
+            )
+        self._seen = self._ids_tx.read_committed(ids_meta)
+        # restores the probe-key log position for the pruned probe
+        # reads; the probe-key frame itself is never held
+        self._keytx.read_committed(self._store.load_meta(self._TXV[0]))
+        self._watermark = self._store.load_watermark(f"{self._META}_wm")
+        self._batches = self._store.epoch
+
+    # -- subclass hooks --------------------------------------------------------
+
+    def _geom(self) -> dict:
+        """The geometry the probe keys are a function of."""
+        raise NotImplementedError
+
+    def _admit(self, rows: DataFrame) -> DataFrame:
+        """Project the raw batch to the rows the stream indexes."""
+        return rows
+
+    def _explode(self, rows: DataFrame):
+        """(sigs, keys): the batch's persisted per-row signature frame
+        (or None) and its persisted probe-key rows (id, _KEYS, carried
+        sources[, __ts])."""
+        raise NotImplementedError
+
+    def _id_rows(self, sigs, rows: DataFrame) -> DataFrame:
+        """The batch's rows of the per-id table (id, payload[, __ts])."""
+        raise NotImplementedError
+
+    def _verify(self, cand: DataFrame, sigs) -> DataFrame:
+        """Exact check of the candidate pairs -> the output pairs."""
+        raise NotImplementedError
+
+    def _with_ts(self, df: DataFrame, rows: DataFrame) -> DataFrame:
+        """df plus each id's event time as __ts (retention mode only)."""
+        from dozer_spark.operators.hints import maybe_broadcast
+
+        if self.retain is None:
+            return df
+        ts_map = rows.select(F.col(self._id), F.col(self._ts).alias("__ts"))
+        return df.join(maybe_broadcast(ts_map, self.gate), self._id)
+
+    # -- the loop --------------------------------------------------------------
+
+    def process_batch(self, rows: DataFrame) -> DataFrame:
+        """Pairs newly discoverable with this batch: within-batch pairs
+        plus batch-vs-state pairs."""
+        from dozer_spark.ops.dedup import _blocked_self_join_pairs
+
+        for df in self._prev_caches:
+            df.unpersist()
+        self._prev_caches = []
+
+        rows = self._admit(rows).dropDuplicates([self._id])
+        seen = self._seen if self._seen is not None else self._keys
+        if seen is not None:
+            rows = rows.join(seen.select(self._id), self._id, "left_anti")
+
+        cutoff = None
+        if self.retain is not None:
+            self._advance_watermark(rows, self._ts)
+            if self._watermark is not None:
+                cutoff = self._cutoff()
+                rows = rows.filter(F.col(self._ts) >= cutoff)
+
+        sigs, keys_new = self._explode(rows)
+        cand = _blocked_self_join_pairs(
+            keys_new, list(self._KEYS), self._id, hot_cap=4096,
+            broadcast_gate_bytes=self.gate, extra_pred=self._pair_pred,
+            carry=self._CARRY,
+        )
+        old = None
+        if self._store is not None:
+            if self._batches > 0:
+                old = self._keytx.read_live_pruned(
+                    self._keytx.touched_bucket_ids(
+                        keys_new.select(*self._KEYS)))
+        else:
+            old = self._keys
+        if old is not None:
+            if cutoff is not None:
+                old = old.filter(F.col("__ts") >= cutoff)
+            # one distinct over the union: the carried columns are
+            # functions of the ids, so it is a per-pair dedup
+            cand = cand.unionByName(self._probe(keys_new, old)).distinct()
+        # Callers act on the pairs after the next epoch has unpersisted
+        # this batch's caches and advanced the state, and often more
+        # than once (count, then collect). The checkpoint runs every
+        # shuffle stage of the pair plan here (AQE executes the query
+        # stages when the plan is executed; eager=False defers only the
+        # last stage to the first action) and keeps the result, so no
+        # action re-runs the joins against changed inputs.
+        pairs = self._verify(cand, sigs).localCheckpoint(eager=False)
+
+        # the amortized physical prune (correctness never depends on
+        # it: the probe filters by cutoff)
+        do_prune = (cutoff is not None and self._batches > 0
+                    and self._prune_due())
+        if self._store is not None:
+            self._commit(keys_new, self._id_rows(sigs, rows), cutoff,
+                         do_prune)
+        else:
+            # append-only: checkpoint only the new rows (O(batch)) and
+            # extend the union lazily. Plan depth grows with the batch
+            # count, so ephemeral mode is for tests and oracle replays;
+            # long-running deployments use state_dir (flat plans).
+            self._keys = _append(self._keys, keys_new)
+            if self._IDS_IN_MEMORY:
+                self._seen = _append(self._seen, self._id_rows(sigs, rows))
+            if do_prune:
+                self._keys = _in_window(self._keys, cutoff)
+                if self._seen is not None:
+                    self._seen = _in_window(self._seen, cutoff)
+        self._batches += 1
+        self._prev_caches = [df for df in (sigs, keys_new) if df is not None]
+        return pairs
+
+    def _probe(self, keys_new: DataFrame, old: DataFrame) -> DataFrame:
+        """New-vs-old candidates, oriented like the batch self-join."""
+        from dozer_spark.operators.hints import maybe_broadcast
+
+        # pin the BATCH side to a broadcast when it clears the gate: the
+        # state side then streams through a hash probe with no shuffle
+        # and no sort. A too-big batch gets a sort-merge join instead:
+        # the probe keys are an explode output, whose fan-out Catalyst
+        # cannot see, so left unhinted it could be under-sized and
+        # wrongly broadcast at scale (SMJ spills where a hash relation
+        # cannot); the state side still broadcasts if it clears the gate.
+        pinned = maybe_broadcast(keys_new, self.gate)
+        if pinned is keys_new:
+            a, b = keys_new.hint("merge"), maybe_broadcast(old, self.gate)
+        else:
+            a, b = pinned, old
+        aid, bid = F.col(f"a.{self._id}"), F.col(f"b.{self._id}")
+        no = (a.alias("a").join(b.alias("b"), list(self._KEYS))
+              .filter(aid != bid))
+        if self._pair_pred is not None:
+            no = no.filter(self._pair_pred)
+        out = [F.least(aid, bid).alias("id_a"),
+               F.greatest(aid, bid).alias("id_b")]
+        for out_a, out_b, src in self._CARRY:
+            sa, sb = F.col(f"a.{src}"), F.col(f"b.{src}")
+            out += [F.when(aid < bid, sa).otherwise(sb).alias(out_a),
+                    F.when(aid < bid, sb).otherwise(sa).alias(out_b)]
+        return no.select(*out)
+
+    def _commit(self, keys_new: DataFrame, ids_new: DataFrame, cutoff,
+                do_prune: bool) -> None:
+        """One durable epoch: both tables' deltas, then the commit."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from dozer_spark.streaming.changelog import row_digest
+
+        digest = row_digest([*self._KEYS, self._id])
+        keys_delta = (keys_new.withColumn(self._DIGEST, digest)
+                      .withColumn("__del", F.lit(False)))
+        ids_delta = ids_new.withColumn("__del", F.lit(False))
+        if do_prune:
+            # tombstones never collide with this batch's inserts (new
+            # rows are inside the window, pruned ones are not). This
+            # full-state read is the design's one state-sized scan, paid
+            # every prune_every epochs, never on the probe path.
+            keys_delta = keys_delta.unionByName(
+                self._keytx.read_live().filter(F.col("__ts") < cutoff)
+                .withColumn(self._DIGEST, digest)
+                .withColumn("__del", F.lit(True))
+            )
+            ids_delta = ids_delta.unionByName(
+                self._seen.filter(F.col("__ts") < cutoff)
+                .withColumn("__del", F.lit(True))
+            )
+        epoch = self._store.epoch + 1
+        # independent dirs: submit both delta appends at once so the
+        # epoch pays one write job's wall-clock, not two in sequence
+        deltas = ((self._keytx, keys_delta), (self._ids_tx, ids_delta))
+        with ThreadPoolExecutor(2) as ex:
+            futs = [ex.submit(tx.advance, delta, epoch, app, not do_prune)
+                    for (tx, delta), app in zip(deltas, self._APPS)]
+            metas = [f.result() for f in futs]
+        for key, meta in zip(self._TXV, metas):
+            self._store.stage_meta(key, meta)
+        self._store.stage_meta(f"{self._META}_geom", self._geom())
+        if self.retain is not None:
+            self._store.stage_watermark(f"{self._META}_wm", self._watermark)
+        self._seen = self._ids_tx.read_live()
+        self._store.commit()
+
+
+def _append(state: DataFrame | None, new: DataFrame) -> DataFrame:
+    ck = new.localCheckpoint(eager=True)
+    return ck if state is None else state.unionByName(ck)
+
+
+def _in_window(state: DataFrame, cutoff) -> DataFrame:
+    return state.filter(F.col("__ts") >= cutoff).localCheckpoint(eager=True)
+
+
+class StreamingMinHashDedup(_ProbeKeyStream):
+    """Incremental MinHash near-dup detection: the streaming face of
+    ops/dedup.minhash_lsh_pairs (the production shape of corpus dedup:
+    ingest continuously, dedup on arrival).
+
+    Probe keys are the LSH bands (id, sz, band, band_key); the per-id
+    table holds the 60-bit token-hash sets (id, toksh) that exact
+    Jaccard verifies on — both O(corpus) but tiny per doc (ints, not
+    text). Candidate pairs pass the batch path's size-ratio prefilter.
+    The union of all emitted pairs equals the batch `minhash_lsh_pairs`
+    over the full corpus.
     """
+
+    _KEYS = ("band", "band_key")
+    _DIGEST = "__bk"
+    _STATE = ("bands", "toks")
+    _APPS = ("smh_bands", "smh_toks")
+    _TXV = ("bands_txv", "toks_txv")
+    _META = "mh"
+    _IDS_IN_MEMORY = True
+
+    _bandtx = property(lambda self: self._keytx)
+    _toks = property(lambda self: self._seen)
 
     def __init__(self, spark, text_col: str, id_col: str,
                  threshold: float = 0.9, n_hashes: int | None = None,
@@ -84,201 +390,49 @@ class StreamingMinHashDedup:
                  broadcast_gate_bytes: int | None = None,
                  ts_col: str | None = None, retain: str | None = None,
                  prune_every: int = 8, state_buckets: int = 256):
-        """ts_col/retain enable BOUNDED-RECALL mode: docs are deduped
-        against a sliding event-time window instead of all history. The
-        watermark is the max ts_col seen; a pair is emitted only when
-        BOTH members' ts are >= watermark - retain at the later member's
-        arrival, and docs later than that horizon are dropped entirely
-        (they could never pair). Correctness comes from the probe-side
-        cutoff filter; the PHYSICAL state prune is amortized (every
-        prune_every batches, enrich-style), so state is O(window), not
-        O(corpus). Re-delivery idempotence then holds within the
-        window: a doc re-sent after its state was pruned re-enters as
-        new — the same bounded-state tradeoff as Spark's
-        dropDuplicatesWithinWatermark.
+        """ts_col/retain enable bounded-recall mode and state_buckets
+        sizes the durable probe-key state (module docstring)."""
+        from dozer_spark.ops.dedup import minhash_geometry, minhash_size_pred
 
-        state_buckets: hash-bucket count of the durable band state,
-        which is bucketed BY THE BAND KEY (band, band_key) so the
-        per-epoch new-vs-old probe reads only the buckets the batch's
-        bands hash to (read_live_pruned) — O(matched buckets), not
-        O(state). Also the deployment parallelism lever; a resumed
-        state keeps the count it was built with."""
-        from dozer_spark.ops.dedup import minhash_geometry
-
-        self.spark = spark
         self.text_col = text_col
-        self.id_col = id_col
         self.threshold = threshold
         # threshold-derived banding, same derivation as the batch path
         # (and therefore the oracle) — see minhash_geometry
         self.n_hashes, self.n_bands = minhash_geometry(
             threshold, n_hashes, n_bands)
-        self.gate = broadcast_gate_bytes
-        if retain is not None and ts_col is None:
-            raise ValueError("retain requires ts_col")
-        self.ts_col = ts_col
-        self.retain = retain
-        self.prune_every = prune_every
-        self._watermark = None
-        self._batches = 0
-        self._bands = None  # (id, sz, band, band_key[, __ts])
-        self._toks = None   # (id, toksh[, __ts])
-        self._store = None
-        self._prev_caches: list = []
-        if state_dir is not None:
-            from dozer_spark.streaming.incstate import (
-                DiffStateTable,
-                diff_state_path,
-            )
-            from dozer_spark.streaming.state import StateStore
+        self._pair_pred = minhash_size_pred(threshold)
+        super().__init__(spark, id_col, state_dir, broadcast_gate_bytes,
+                         ts_col, retain, prune_every, state_buckets)
 
-            self._store = StateStore(spark, state_dir)
-            _check_state_geometry(
-                self._store, "mh_geom",
-                {"n_hashes": self.n_hashes, "n_bands": self.n_bands},
-                "StreamingMinHashDedup",
-            )
-            self._bandtx = DiffStateTable(
-                spark, diff_state_path(state_dir, "bands"),
-                key_cols=["__bk"], internal_key=True,
-                bucket_cols=["band", "band_key"], n_buckets=state_buckets,
-            )
-            self._tokstx = DiffStateTable(
-                spark, diff_state_path(state_dir, "toks"),
-                key_cols=[self.id_col],
-            )
-            if self._store.epoch > 0:
-                # restore the band log position (pending deltas / base
-                # version) for the pruned per-epoch probe reads; the
-                # band frame itself is never held — probes read pruned
-                self._bandtx.read_committed(
-                    self._store.load_meta("bands_txv"))
-                self._toks = self._tokstx.read_committed(
-                    self._store.load_meta("toks_txv"))
-                wm = self._store.load_meta("mh_wm")
-                if wm and wm.get("wm") is not None:
-                    import datetime as _dt
+    def _geom(self) -> dict:
+        return {"n_hashes": self.n_hashes, "n_bands": self.n_bands}
 
-                    self._watermark = _dt.datetime.fromisoformat(wm["wm"])
-                self._batches = self._store.epoch
-
-    def process_batch(self, docs: DataFrame) -> DataFrame:
-        """Near-dup pairs (id_a, id_b, jaccard) newly discoverable with
-        this batch: within-batch pairs plus batch-vs-corpus pairs."""
-        from pyspark.sql import functions as F
-
-        from dozer_spark.operators.hints import maybe_broadcast
-        from dozer_spark.ops.dedup import (
-            _blocked_self_join_pairs,
-            minhash_signatures,
-        )
-        from dozer_spark.streaming.changelog import row_digest
-
-        from dozer_spark.ops.dedup import (
-            minhash_band_table,
-            minhash_size_pred,
-        )
-
-        for df in self._prev_caches:
-            df.unpersist()
-        self._prev_caches = []
-
-        # at-least-once sources re-deliver: a doc id already in state is
-        # SKIPPED (first write wins — ids are immutable doc identities),
-        # and within-batch duplicates reduce to one row, so the
-        # exactly-once pair contract holds under re-delivery too
-        docs = docs.dropDuplicates([self.id_col])
-        if self._toks is not None:
-            docs = docs.join(
-                self._toks.select(self.id_col), self.id_col, "left_anti"
-            )
-
-        # bounded-recall mode: advance the watermark from the RAW batch,
-        # then drop docs beyond the horizon (they could never pair) and
-        # restrict the probe-side state to the window
-        cutoff = None
-        if self.retain is not None:
-            mx = docs.agg(F.max(self.ts_col)).first()[0]
-            if mx is not None and (self._watermark is None
-                                   or mx > self._watermark):
-                self._watermark = mx
-            if self._watermark is not None:
-                cutoff = (F.lit(self._watermark)
-                          - F.expr(f"INTERVAL {self.retain}"))
-                docs = docs.filter(F.col(self.ts_col) >= cutoff)
+    def _explode(self, rows):
+        from dozer_spark.ops.dedup import minhash_band_table, minhash_signatures
 
         sigs = minhash_signatures(
-            docs, self.text_col, self.id_col, self.n_hashes
+            rows, self.text_col, self.id_col, self.n_hashes
         ).drop("toks").persist()
-        # band geometry + size prefilter are the BATCH code (shared
-        # helpers) — the streaming output can't drift from the oracle
-        bands_new = minhash_band_table(
-            sigs, self.id_col, self.n_hashes, self.n_bands
-        )
-        if self.retain is not None:
-            ts_map = docs.select(
-                F.col(self.id_col), F.col(self.ts_col).alias("__ts")
-            )
-            bands_new = bands_new.join(
-                maybe_broadcast(ts_map, self.gate), self.id_col
-            )
-        bands_new = bands_new.persist()
-        size_ok = minhash_size_pred(self.threshold)
-        # new-vs-new: the full batch machinery (skew probe + hot split)
-        cand = _blocked_self_join_pairs(
-            bands_new, ["band", "band_key"], self.id_col,
-            hot_cap=4096, broadcast_gate_bytes=self.gate,
-            extra_pred=size_ok,
-        )
-        # new-vs-old: batch bands probe the corpus bands; canonical
-        # (id_a < id_b) keeps the pair orientation identical to batch
-        # mode whichever side arrived first. Durable state reads ONLY
-        # the buckets the batch's band keys hash to (state is bucketed
-        # by (band, band_key)); ephemeral state is the in-memory frame.
-        old_bands = None
-        if self._store is not None:
-            if self._batches > 0:
-                bids = self._bandtx.touched_bucket_ids(
-                    bands_new.select("band", "band_key"))
-                old_bands = self._bandtx.read_live_pruned(bids)
-        else:
-            old_bands = self._bands
-        if old_bands is not None and cutoff is not None:
-            old_bands = old_bands.filter(F.col("__ts") >= cutoff)
-        if old_bands is not None:
-            # pin the BATCH side to a broadcast when its measured cache
-            # size clears the gate — the state side then streams through
-            # a hash probe with no shuffle and no sort; otherwise leave
-            # both sides unhinted (AQE sizes the join at runtime)
-            bb = maybe_broadcast(bands_new, self.gate)
-            a = bb.alias("a")
-            o = old_bands.alias("b")
-            no = (
-                a.join(o, ["band", "band_key"])
-                .filter(F.col(f"a.{self.id_col}") != F.col(f"b.{self.id_col}"))
-                .filter(size_ok)
-                .select(
-                    F.least(F.col(f"a.{self.id_col}"),
-                            F.col(f"b.{self.id_col}")).alias("id_a"),
-                    F.greatest(F.col(f"a.{self.id_col}"),
-                               F.col(f"b.{self.id_col}")).alias("id_b"),
-                )
-            )
-            # one distinct over the union (an inner distinct on `no`
-            # would just add a second full shuffle)
-            cand = cand.unionByName(no).distinct()
+        bands = minhash_band_table(sigs, self.id_col, self.n_hashes,
+                                   self.n_bands)
+        return sigs, self._with_ts(bands, rows).persist()
+
+    def _id_rows(self, sigs, rows):
+        return self._with_ts(sigs.select(self.id_col, "toksh"), rows)
+
+    def _verify(self, cand, sigs):
+        from dozer_spark.operators.hints import maybe_broadcast
 
         toks_all = sigs.select(self.id_col, "toksh")
-        if self._toks is not None:
+        if self._seen is not None:
             # explicit projection: retention-mode state carries __ts
             toks_all = toks_all.unionByName(
-                self._toks.select(self.id_col, "toksh")
-            )
+                self._seen.select(self.id_col, "toksh"))
         side_a = toks_all.select(F.col(self.id_col).alias("id_a"),
                                  F.col("toksh").alias("toks_a"))
         side_b = toks_all.select(F.col(self.id_col).alias("id_b"),
                                  F.col("toksh").alias("toks_b"))
-        pairs = (
+        return (
             cand.join(maybe_broadcast(side_a, self.gate), "id_a")
             .join(maybe_broadcast(side_b, self.gate), "id_b")
             .withColumn(
@@ -288,117 +442,27 @@ class StreamingMinHashDedup:
             )
             .filter(F.col("jaccard") >= self.threshold)
             .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-            .localCheckpoint(eager=False)
         )
 
-        # advance state
-        toks_new = sigs.select(self.id_col, "toksh")
-        if self.retain is not None:
-            toks_new = toks_new.join(
-                maybe_broadcast(
-                    docs.select(F.col(self.id_col),
-                                F.col(self.ts_col).alias("__ts")),
-                    self.gate,
-                ),
-                self.id_col,
-            )
-        # amortized PHYSICAL prune of out-of-window state (correctness
-        # never depends on it — the probe filters by cutoff — so it can
-        # run every prune_every batches, enrich-style)
-        do_prune = (
-            self.retain is not None and cutoff is not None
-            and self._batches > 0
-            and self._batches % self.prune_every == self.prune_every - 1
-        )
-        if self._store is not None:
-            epoch = self._store.epoch + 1
-            # the two state tables are independent dirs: submit both
-            # delta appends concurrently so the epoch pays ONE write
-            # job's wall-clock, not two in sequence
-            from concurrent.futures import ThreadPoolExecutor
 
-            bands_delta = bands_new.withColumn(
-                "__bk", row_digest(["band", "band_key", self.id_col])
-            ).withColumn("__del", F.lit(False))
-            toks_delta = toks_new.withColumn("__del", F.lit(False))
-            if do_prune:
-                # delete rows never collide with this batch's upserts:
-                # new docs are inside the window, pruned rows are not.
-                # The full-state read here is the design's ONE
-                # state-sized scan, paid every prune_every epochs —
-                # never on the probe path.
-                bands_delta = bands_delta.unionByName(
-                    self._bandtx.read_live().filter(F.col("__ts") < cutoff)
-                    .withColumn("__bk", row_digest(
-                        ["band", "band_key", self.id_col]))
-                    .withColumn("__del", F.lit(True))
-                )
-                toks_delta = toks_delta.unionByName(
-                    self._toks.filter(F.col("__ts") < cutoff)
-                    .withColumn("__del", F.lit(True))
-                )
-            with ThreadPoolExecutor(2) as ex:
-                fb = ex.submit(self._bandtx.advance, bands_delta,
-                               epoch, "smh_bands",
-                               not do_prune)
-                ft = ex.submit(self._tokstx.advance, toks_delta,
-                               epoch, "smh_toks",
-                               not do_prune)
-                bmeta, tmeta = fb.result(), ft.result()
-            self._store.stage_meta("bands_txv", bmeta)
-            self._store.stage_meta("toks_txv", tmeta)
-            self._store.stage_meta(
-                "mh_geom",
-                {"n_hashes": self.n_hashes, "n_bands": self.n_bands},
-            )
-            if self.retain is not None:
-                self._store.stage_meta(
-                    "mh_wm",
-                    {"wm": self._watermark.isoformat()
-                     if self._watermark is not None else None},
-                )
-            self._toks = self._tokstx.read_live()
-            self._store.commit()
-        else:
-            # ephemeral state is append-only: checkpoint ONLY the new
-            # rows (O(batch) work) and extend the union lazily — the
-            # earlier checkpoints stay materialized. Plan depth grows
-            # with batch count, so ephemeral mode is for tests/oracle
-            # replays; long-running deployments use state_dir (delta-log
-            # tables, flat plans at any epoch).
-            b_ck = bands_new.localCheckpoint(eager=True)
-            self._bands = (b_ck if self._bands is None
-                           else self._bands.unionByName(b_ck))
-            t_ck = toks_new.localCheckpoint(eager=True)
-            self._toks = (t_ck if self._toks is None
-                          else self._toks.unionByName(t_ck))
-            if do_prune:
-                self._bands = self._bands.filter(
-                    F.col("__ts") >= cutoff
-                ).localCheckpoint(eager=True)
-                self._toks = self._toks.filter(
-                    F.col("__ts") >= cutoff
-                ).localCheckpoint(eager=True)
-        self._batches += 1
-        self._prev_caches = [sigs, bands_new]
-        return pairs
-
-
-class StreamingSimHashDedup:
-    """Incremental SimHash near-dup detection — the streaming face of
-    ops/dedup.simhash_pairs, same state-probe shape as
-    StreamingMinHashDedup but lighter: the signature IS the verifier
-    (hamming over two int64s), so the only state is the chunk table
-    (id, simhash, chunk, chunk_val) — a few ints per doc per chunk,
-    delta-log durable when state_dir is set.
-
-    Exactly-once pairs for the same reason as MinHash: signatures are
-    deterministic in the text, a pair collides in the same chunks
-    whenever both members exist, and new-vs-old only pairs a new doc
-    with strictly-older state. The union of all emitted pairs equals
-    the one-shot batch simhash_pairs — the exact oracle
-    cdc_streaming_simhash_dedup replays.
+class StreamingSimHashDedup(_ProbeKeyStream):
+    """Incremental SimHash near-dup detection: the streaming face of
+    ops/dedup.simhash_pairs. Probe keys are the pigeonhole chunks (id,
+    simhash, chunk, chunk_val); the signature is the verifier (hamming
+    over two int64s carried through the join), so the per-id table is
+    only the seen-id filter. The union of all emitted pairs equals the
+    one-shot batch simhash_pairs.
     """
+
+    _KEYS = ("chunk", "chunk_val")
+    _DIGEST = "__ck"
+    _STATE = ("chunks", "ssh_ids")
+    _APPS = ("ssh_chunks", "ssh_ids")
+    _TXV = ("chunks_txv", "ssh_ids_txv")
+    _META = "ssh"
+    _CARRY = (("sig_a", "sig_b", "simhash"),)
+
+    _chunktx = property(lambda self: self._keytx)
 
     def __init__(self, spark, text_col: str, id_col: str,
                  max_hamming: int = 3, n_bits: int = 60,
@@ -406,171 +470,30 @@ class StreamingSimHashDedup:
                  broadcast_gate_bytes: int | None = None,
                  ts_col: str | None = None, retain: str | None = None,
                  prune_every: int = 8, state_buckets: int = 256):
-        """ts_col/retain: bounded-recall mode, same contract as
-        StreamingMinHashDedup (probe-side cutoff filter for emission
-        correctness, amortized physical eviction for O(window) state).
-        state_buckets: durable chunk-state bucket count — the state is
-        bucketed BY THE CHUNK KEY so per-epoch probes read only matched
-        buckets (see StreamingMinHashDedup)."""
-        self.spark = spark
+        """ts_col/retain enable bounded-recall mode and state_buckets
+        sizes the durable probe-key state (module docstring)."""
         self.text_col = text_col
-        self.id_col = id_col
         self.max_hamming = max_hamming
         self.n_bits = n_bits
-        self.gate = broadcast_gate_bytes
-        if retain is not None and ts_col is None:
-            raise ValueError("retain requires ts_col")
-        self.ts_col = ts_col
-        self.retain = retain
-        self.prune_every = prune_every
-        self._watermark = None
-        self._batches = 0
-        self._chunks = None  # ephemeral: (id, simhash, chunk, chunk_val[, __ts])
-        self._seen = None    # durable: (id[, __ts])
-        self._store = None
-        self._prev_caches: list = []
-        if state_dir is not None:
-            from dozer_spark.streaming.incstate import (
-                DiffStateTable,
-                diff_state_path,
-            )
-            from dozer_spark.streaming.state import StateStore
+        super().__init__(spark, id_col, state_dir, broadcast_gate_bytes,
+                         ts_col, retain, prune_every, state_buckets)
 
-            self._store = StateStore(spark, state_dir)
-            _check_state_geometry(
-                self._store, "ssh_geom",
-                {"n_bits": self.n_bits, "max_hamming": self.max_hamming},
-                "StreamingSimHashDedup",
-            )
-            self._chunktx = DiffStateTable(
-                spark, diff_state_path(state_dir, "chunks"),
-                key_cols=["__ck"], internal_key=True,
-                bucket_cols=["chunk", "chunk_val"], n_buckets=state_buckets,
-            )
-            self._ids_tx = DiffStateTable(
-                spark, diff_state_path(state_dir, "ssh_ids"),
-                key_cols=[self.id_col],
-            )
-            if self._store.epoch > 0:
-                ids_meta = self._store.load_meta("ssh_ids_txv")
-                if ids_meta is None:
-                    raise ValueError(
-                        "StreamingSimHashDedup: durable state at "
-                        f"{state_dir!r} predates the bucketed-probe "
-                        "layout (no ssh_ids state); delete the state "
-                        "dir to rebuild"
-                    )
-                self._seen = self._ids_tx.read_committed(ids_meta)
-                # restore the chunk log position for pruned probe reads
-                self._chunktx.read_committed(
-                    self._store.load_meta("chunks_txv"))
-                wm = self._store.load_meta("ssh_wm")
-                if wm and wm.get("wm") is not None:
-                    import datetime as _dt
+    def _geom(self) -> dict:
+        return {"n_bits": self.n_bits, "max_hamming": self.max_hamming}
 
-                    self._watermark = _dt.datetime.fromisoformat(wm["wm"])
-                self._batches = self._store.epoch
+    def _explode(self, rows):
+        from dozer_spark.ops.dedup import simhash, simhash_chunk_table
 
-    def process_batch(self, docs: DataFrame) -> DataFrame:
-        """Pairs (id_a, id_b, hamming) newly discoverable this batch."""
-        from pyspark.sql import functions as F
+        sigs = simhash(rows, self.text_col, self.id_col, self.n_bits).persist()
+        chunks = simhash_chunk_table(sigs, self.id_col, self.n_bits,
+                                     self.max_hamming)
+        return sigs, self._with_ts(chunks, rows).persist()
 
-        from dozer_spark.ops.dedup import (
-            _blocked_self_join_pairs,
-            simhash,
-        )
-        from dozer_spark.streaming.changelog import row_digest
+    def _id_rows(self, sigs, rows):
+        return self._with_ts(sigs.select(self.id_col), rows)
 
-        from dozer_spark.ops.dedup import simhash_chunk_table
-
-        for df in self._prev_caches:
-            df.unpersist()
-        self._prev_caches = []
-
-        from dozer_spark.operators.hints import maybe_broadcast
-
-        # re-delivery idempotence: skip ids already indexed (same
-        # contract as StreamingMinHashDedup). Durable mode checks the
-        # slim per-id table; ephemeral projects the chunk frame.
-        docs = docs.dropDuplicates([self.id_col])
-        if self._store is not None:
-            if self._seen is not None:
-                docs = docs.join(
-                    self._seen.select(self.id_col), self.id_col, "left_anti")
-        elif self._chunks is not None:
-            docs = docs.join(
-                self._chunks.select(self.id_col).distinct(),
-                self.id_col, "left_anti",
-            )
-
-        # bounded-recall window (see StreamingMinHashDedup)
-        cutoff = None
-        if self.retain is not None:
-            mx = docs.agg(F.max(self.ts_col)).first()[0]
-            if mx is not None and (self._watermark is None
-                                   or mx > self._watermark):
-                self._watermark = mx
-            if self._watermark is not None:
-                cutoff = (F.lit(self._watermark)
-                          - F.expr(f"INTERVAL {self.retain}"))
-                docs = docs.filter(F.col(self.ts_col) >= cutoff)
-
-        sigs = simhash(docs, self.text_col, self.id_col, self.n_bits).persist()
-        # chunk geometry is the batch code (shared helper)
-        chunks_new = simhash_chunk_table(
-            sigs, self.id_col, self.n_bits, self.max_hamming
-        )
-        if self.retain is not None:
-            chunks_new = chunks_new.join(
-                maybe_broadcast(
-                    docs.select(F.col(self.id_col),
-                                F.col(self.ts_col).alias("__ts")),
-                    self.gate,
-                ),
-                self.id_col,
-            )
-        chunks_new = chunks_new.persist()
-
-        cand = _blocked_self_join_pairs(
-            chunks_new, ["chunk", "chunk_val"], self.id_col,
-            hot_cap=4096, broadcast_gate_bytes=self.gate,
-            carry=(("sig_a", "sig_b", "simhash"),),
-        )
-        # new-vs-old probe: durable state reads only the buckets the
-        # batch's chunk keys hash to; batch side broadcast under the
-        # gate (see StreamingMinHashDedup)
-        old_chunks = None
-        if self._store is not None:
-            if self._batches > 0:
-                bids = self._chunktx.touched_bucket_ids(
-                    chunks_new.select("chunk", "chunk_val"))
-                old_chunks = self._chunktx.read_live_pruned(bids)
-        else:
-            old_chunks = self._chunks
-        if old_chunks is not None and cutoff is not None:
-            old_chunks = old_chunks.filter(F.col("__ts") >= cutoff)
-        if old_chunks is not None:
-            a = maybe_broadcast(chunks_new, self.gate).alias("a")
-            o = old_chunks.alias("b")
-            aid, bid = F.col(f"a.{self.id_col}"), F.col(f"b.{self.id_col}")
-            # canonical orientation: sig_a belongs to the smaller id,
-            # whichever side it arrived on
-            no = (
-                a.join(o, ["chunk", "chunk_val"])
-                .filter(aid != bid)
-                .select(
-                    F.least(aid, bid).alias("id_a"),
-                    F.greatest(aid, bid).alias("id_b"),
-                    F.when(aid < bid, F.col("a.simhash"))
-                    .otherwise(F.col("b.simhash")).alias("sig_a"),
-                    F.when(aid < bid, F.col("b.simhash"))
-                    .otherwise(F.col("a.simhash")).alias("sig_b"),
-                )
-            )
-            # one distinct over the union (see StreamingMinHashDedup)
-            cand = cand.unionByName(no).distinct()
-
-        pairs = (
+    def _verify(self, cand, sigs):
+        return (
             cand.withColumn(
                 "hamming",
                 F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -578,76 +501,7 @@ class StreamingSimHashDedup:
             )
             .filter(F.col("hamming") <= self.max_hamming)
             .select("id_a", "id_b", "hamming")
-            .localCheckpoint(eager=False)
         )
-
-        do_prune = (
-            self.retain is not None and cutoff is not None
-            and self._batches > 0
-            and self._batches % self.prune_every == self.prune_every - 1
-        )
-        if self._store is not None:
-            epoch = self._store.epoch + 1
-            delta = chunks_new.withColumn(
-                "__ck", row_digest(["chunk", "chunk_val", self.id_col])
-            ).withColumn("__del", F.lit(False))
-            id_cols = [self.id_col] + (
-                ["__ts"] if self.retain is not None else [])
-            ids_delta = (
-                sigs.select(self.id_col)
-                if self.retain is None else
-                sigs.join(
-                    docs.select(F.col(self.id_col),
-                                F.col(self.ts_col).alias("__ts")),
-                    self.id_col,
-                ).select(*id_cols)
-            ).withColumn("__del", F.lit(False))
-            if do_prune:
-                # the one full-state read, amortized every prune_every
-                # epochs — never on the probe path
-                delta = delta.unionByName(
-                    self._chunktx.read_live().filter(F.col("__ts") < cutoff)
-                    .withColumn("__ck", row_digest(
-                        ["chunk", "chunk_val", self.id_col]))
-                    .withColumn("__del", F.lit(True))
-                )
-                ids_delta = ids_delta.unionByName(
-                    self._seen.filter(F.col("__ts") < cutoff)
-                    .withColumn("__del", F.lit(True))
-                )
-            meta = self._chunktx.advance(delta, epoch=epoch,
-                                         app_id="ssh_chunks",
-                                         fresh_keys=not do_prune)
-            ids_meta = self._ids_tx.advance(ids_delta, epoch=epoch,
-                                            app_id="ssh_ids",
-                                            fresh_keys=not do_prune)
-            self._store.stage_meta("chunks_txv", meta)
-            self._store.stage_meta("ssh_ids_txv", ids_meta)
-            self._store.stage_meta(
-                "ssh_geom",
-                {"n_bits": self.n_bits, "max_hamming": self.max_hamming},
-            )
-            if self.retain is not None:
-                self._store.stage_meta(
-                    "ssh_wm",
-                    {"wm": self._watermark.isoformat()
-                     if self._watermark is not None else None},
-                )
-            self._seen = self._ids_tx.read_live()
-            self._store.commit()
-        else:
-            # append-only ephemeral state: checkpoint just the new rows,
-            # union lazily (see StreamingMinHashDedup)
-            c_ck = chunks_new.localCheckpoint(eager=True)
-            self._chunks = (c_ck if self._chunks is None
-                            else self._chunks.unionByName(c_ck))
-            if do_prune:
-                self._chunks = self._chunks.filter(
-                    F.col("__ts") >= cutoff
-                ).localCheckpoint(eager=True)
-        self._batches += 1
-        self._prev_caches = [sigs, chunks_new]
-        return pairs
 
 
 class StreamingClusters:

@@ -39,10 +39,11 @@ from pyspark.sql import functions as F
 
 from dozer_spark.operators.temporal import asof_join
 from dozer_spark.streaming.changelog import row_digest
+from dozer_spark.streaming.state import EventTimeRetention
 
 
 @dataclass
-class TemporalEnrich:
+class TemporalEnrich(EventTimeRetention):
     """Enrich an append-only fact stream with the dimension version
     valid at each fact's event time.
 
@@ -99,11 +100,7 @@ class TemporalEnrich:
                 self._versions = self._vtx.read_committed(
                     self._store.load_meta("versions_txv")
                 )
-                wm = self._store.load_meta("enrich_wm")
-                if wm and wm.get("wm") is not None:
-                    import datetime as _dt
-
-                    self._watermark = _dt.datetime.fromisoformat(wm["wm"])
+                self._watermark = self._store.load_watermark("enrich_wm")
                 self._batches = self._store.epoch
 
     # -- internals -----------------------------------------------------------
@@ -135,7 +132,7 @@ class TemporalEnrich:
         """Drop versions older than the horizon, keeping the newest
         at-or-before-cutoff version per key (still the valid image for
         any fact inside the horizon)."""
-        cutoff = F.lit(self._watermark) - F.expr(f"INTERVAL {self.retain}")
+        cutoff = self._cutoff()
         if self.lateness is not None:
             cutoff = cutoff - F.expr(f"INTERVAL {self.lateness}")
         old = F.col("__vts") < cutoff
@@ -178,7 +175,7 @@ class TemporalEnrich:
                 ).withColumn("__del", F.lit(False))
             if (self.retain is not None and self._watermark is not None
                     and self._versions is not None
-                    and self._batches % self.prune_every == self.prune_every - 1):
+                    and self._prune_due()):
                 live = self._versions
                 kept = self._prune(live)
                 pruned_keys = live.join(
@@ -218,7 +215,7 @@ class TemporalEnrich:
                 self._versions = merged.localCheckpoint(eager=True)
             if (self.retain is not None and self._watermark is not None
                     and self._versions is not None
-                    and self._batches % self.prune_every == self.prune_every - 1):
+                    and self._prune_due()):
                 self._versions = self._prune(
                     self._versions
                 ).localCheckpoint(eager=True)
@@ -255,16 +252,10 @@ class TemporalEnrich:
             )
         if facts is not None:
             # advance the event-time watermark from the facts
-            mx = facts.agg(F.max(self.fact_ts)).first()[0]
-            if mx is not None and (self._watermark is None or mx > self._watermark):
-                self._watermark = mx
+            self._advance_watermark(facts, self.fact_ts)
 
         if self._store is not None:
-            self._store.stage_meta(
-                "enrich_wm",
-                {"wm": self._watermark.isoformat()
-                 if self._watermark is not None else None},
-            )
+            self._store.stage_watermark("enrich_wm", self._watermark)
             self._store.commit()
         self._batches += 1
         return out

@@ -17,6 +17,11 @@ on restart). The operator states themselves live in DiffStateTables
   operator instance (new driver, new session) resumes where the old one
   stopped.
 
+`EventTimeRetention` is the watermark side of the same contract: the
+operators with a retention window (TemporalEnrich, the near-dup streams)
+share its watermark advance, cutoff and prune schedule, and stage the
+watermark with `stage_watermark` so a resume restores it.
+
 On a real cluster `root` lives on the shared filesystem (HDFS/S3 via a
 committer, or swap the manifest for a Delta transaction log); the
 single-writer assumption matches the reference (one process owns a
@@ -25,12 +30,37 @@ pipeline's state).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
 
 MANIFEST = "MANIFEST.json"
+
+
+class EventTimeRetention:
+    """Bounded-recall bookkeeping of the operators that take retain and
+    prune_every (TemporalEnrich, the near-dup streams): the event-time
+    watermark (the max event time seen), the retention cutoff behind it,
+    and the amortized physical-prune schedule. The operator holds
+    `retain`, `prune_every`, `_watermark` and `_batches` (0-based count
+    of processed batches)."""
+
+    def _advance_watermark(self, rows, ts_col: str) -> None:
+        mx = rows.agg(F.max(ts_col)).first()[0]
+        if mx is not None and (self._watermark is None
+                               or mx > self._watermark):
+            self._watermark = mx
+
+    def _cutoff(self) -> Column:
+        """Rows older than this have left the window."""
+        return F.lit(self._watermark) - F.expr(f"INTERVAL {self.retain}")
+
+    def _prune_due(self) -> bool:
+        """The last batch of every prune_every-batch cycle prunes."""
+        return self._batches % self.prune_every == self.prune_every - 1
 
 
 class StateStore:
@@ -85,3 +115,15 @@ class StateStore:
         if entry is None:
             return None
         return entry.get("meta")
+
+    def stage_watermark(self, name: str, wm) -> None:
+        """Stage an event-time watermark (a datetime or None)."""
+        self.stage_meta(name, {"wm": wm.isoformat() if wm is not None
+                               else None})
+
+    def load_watermark(self, name: str):
+        """The committed watermark staged under name, or None."""
+        wm = self.load_meta(name)
+        if wm and wm.get("wm") is not None:
+            return datetime.datetime.fromisoformat(wm["wm"])
+        return None

@@ -355,17 +355,3 @@ def test_ensure_min_partitions_in_memory_escape_hatches(spark, monkeypatch):
     monkeypatch.setattr(hints, "IN_MEMORY_REBALANCE_BYTES", 1)
     assert (ensure_min_partitions(known)
             .rdd.getNumPartitions() == target)
-
-
-def test_ensure_min_partitions_ab_knob(spark, monkeypatch):
-    """SPARK_GRAFT_REBALANCE_MODE=always restores the ungated behavior
-    (A/B evidence knob for SCALING.md): the in-memory skip is bypassed."""
-    from dozer_spark.operators.hints import ensure_min_partitions
-
-    target = spark.sparkContext.defaultParallelism
-    mem = spark.createDataFrame(
-        [(i,) for i in range(50)], "id long").coalesce(1)
-    assert ensure_min_partitions(mem).rdd.getNumPartitions() == 1
-    monkeypatch.setenv("SPARK_GRAFT_REBALANCE_MODE", "always")
-    assert (ensure_min_partitions(mem)
-            .rdd.getNumPartitions() == target)

@@ -160,25 +160,114 @@ def test_streaming_clusters_merge_and_resume(spark, tmp_path):
     assert got[1] == 0 and got[100] == 100 and got[101] == 100
 
 
-@pytest.mark.slow
-def test_redelivered_docs_do_not_duplicate_pairs(spark):
-    from dozer_spark.streaming.dedup import (
-        StreamingMinHashDedup,
-        StreamingSimHashDedup,
-    )
+def _near_dup_stream(spark, kind: str, **kw):
+    """One of the three near-dup streams over DOCS' (doc_id, text)."""
+    from dozer_spark.streaming.dedup import StreamingSimHashDedup
+    from dozer_spark.streaming.fuzzy import StreamingFuzzyIndex
 
+    if kind == "minhash":
+        return StreamingMinHashDedup(spark, "text", "doc_id", **kw)
+    if kind == "simhash":
+        return StreamingSimHashDedup(spark, "text", "doc_id", **kw)
+    return StreamingFuzzyIndex(spark, "text", "doc_id", **kw)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("durable", [False, True],
+                         ids=["ephemeral", "durable"])
+@pytest.mark.parametrize("kind", ["minhash", "simhash", "fuzzy"])
+def test_redelivered_docs_do_not_duplicate_pairs(spark, tmp_path, kind,
+                                                 durable):
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    for cls in (StreamingMinHashDedup, StreamingSimHashDedup):
-        s = cls(spark, "text", "doc_id")
-        first = s.process_batch(docs).count()
-        assert first > 0
-        # at-least-once re-delivery of the WHOLE corpus: no new pairs,
-        # and the state holds one row set per doc (no multiplication)
-        assert s.process_batch(docs).count() == 0
-        # a batch containing the same doc twice reduces to one
-        dup_batch = docs.filter(docs.doc_id == 1).unionByName(
-            docs.filter(docs.doc_id == 1))
-        assert s.process_batch(dup_batch).count() == 0
+    kw = {"state_dir": str(tmp_path / kind)} if durable else {}
+    s = _near_dup_stream(spark, kind, **kw)
+    first = s.process_batch(docs).count()
+    assert first > 0
+    # at-least-once re-delivery of the WHOLE corpus: no new pairs,
+    # and the state holds one row set per doc (no multiplication)
+    assert s.process_batch(docs).count() == 0
+    # a batch containing the same doc twice reduces to one
+    dup_batch = docs.filter(docs.doc_id == 1).unionByName(
+        docs.filter(docs.doc_id == 1))
+    assert s.process_batch(dup_batch).count() == 0
+
+
+# (doc_id, text, minute): four epochs of two docs each, near-identical
+# texts so co-window pairs verify under every stream
+SPY_DOCS = [
+    (i, "the quick brown fox jumps over the lazy dog", m)
+    for i, m in zip(range(1, 9), (0, 5, 20, 25, 50, 55, 60, 65))
+]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", ["minhash", "simhash", "fuzzy"])
+def test_probe_path_never_reads_full_key_state(spark, tmp_path, kind,
+                                               monkeypatch):
+    """Durable bounded-recall streams read the probe-key state ONLY
+    bucket-pruned, and only in the buckets the batch's keys hash to; the
+    one full read (`read_live`) is the amortized TTL prune's, once per
+    prune epoch (prune_every=2: the 2nd and 4th epochs)."""
+    from pyspark.sql import functions as F
+
+    from dozer_spark.ops.dedup import (
+        minhash_band_table,
+        minhash_signatures,
+        simhash,
+        simhash_chunk_table,
+    )
+    from dozer_spark.ops.fuzzy import deletion_variants
+
+    docs = spark.createDataFrame(
+        SPY_DOCS, ["doc_id", "text", "minute"]
+    ).withColumn(
+        "ts",
+        F.expr("TIMESTAMP '2024-01-01 00:00:00' "
+               "+ make_interval(0, 0, 0, 0, 0, minute, 0)"),
+    ).drop("minute")
+    s = _near_dup_stream(spark, kind, state_dir=str(tmp_path / kind),
+                         ts_col="ts", retain="30 minutes", prune_every=2)
+    tx = {"minhash": "_bandtx", "simhash": "_chunktx", "fuzzy": "_tx"}[kind]
+    tx = getattr(s, tx)
+
+    def batch_keys(batch):
+        if kind == "minhash":
+            sigs = minhash_signatures(batch, "text", "doc_id", s.n_hashes)
+            return minhash_band_table(sigs, "doc_id", s.n_hashes,
+                                      s.n_bands).select("band", "band_key")
+        if kind == "simhash":
+            sigs = simhash(batch, "text", "doc_id", s.n_bits)
+            return simhash_chunk_table(
+                sigs, "doc_id", s.n_bits, s.max_hamming
+            ).select("chunk", "chunk_val")
+        return batch.select(
+            F.explode(deletion_variants(F.col("text"))).alias("__k"))
+
+    calls = {"live": 0, "pruned": []}
+    read_live, read_live_pruned = tx.read_live, tx.read_live_pruned
+
+    def spy_live():
+        calls["live"] += 1
+        return read_live()
+
+    def spy_pruned(bucket_ids):
+        calls["pruned"].append(list(bucket_ids))
+        return read_live_pruned(bucket_ids)
+
+    monkeypatch.setattr(tx, "read_live", spy_live)
+    monkeypatch.setattr(tx, "read_live_pruned", spy_pruned)
+    for epoch in range(4):
+        calls["live"], calls["pruned"] = 0, []
+        batch = docs.filter(F.col("doc_id").isin(2 * epoch + 1, 2 * epoch + 2))
+        s.process_batch(batch).collect()
+        prune_epoch = epoch % 2 == 1
+        assert calls["live"] == (1 if prune_epoch else 0), epoch
+        if epoch == 0:
+            assert calls["pruned"] == []  # nothing committed to probe yet
+            continue
+        assert len(calls["pruned"]) == 1, epoch
+        touched = set(tx.touched_bucket_ids(batch_keys(batch)))
+        assert set(calls["pruned"][0]) <= touched, epoch
 
 
 def test_ann_duplicate_ids_within_batch_reduce(spark):
